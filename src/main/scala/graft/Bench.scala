@@ -185,12 +185,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.profile(SparkSession.builder().master(s"local[$cpus]"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.warmUp(spark)
@@ -237,12 +232,7 @@ object Bench {
     // instead of silently becoming {}; `errors` records why.
     def inProcessIsolated(): String = {
       val top5 = results.filter(_._3 >= 0).sortBy(-_._3).take(5).map(_._1)
-      val spark2 = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val spark2 = SparkEntry.profile(SparkSession.builder().master(s"local[$cpus]"), cpus)
         .getOrCreate()
       spark2.sparkContext.setLogLevel("WARN")
       val out = try top5.map { name =>
@@ -326,22 +316,10 @@ object Bench {
           // fall back in-process so the metric still exists; the error map
           // (engine_fork_1) records why the outlier-proof path was
           // unavailable
-          val parts = sys.env.getOrElse("SPARK_GRAFT_ENGINE_PARTITIONS", "4")
-          // must mirror EngineBench.main's session exactly — a fallback
-          // measured under a different engine mode (codegen on) would not
-          // be comparable to forked rounds, and the interpreted-sized
-          // sentinel probe could no longer resolve ambient load
-          val spark3 = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .config("spark.sql.shuffle.partitions", parts)
-            .config("spark.sql.limit.initialNumPartitions", parts)
-            .config("spark.sql.codegen.wholeStage",
-              sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "false"))
-            .config("spark.ui.enabled", "false")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "false")
-            .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-            .getOrCreate()
+          // EngineBench.main's session: a fallback measured under another
+          // profile would not be comparable to forked rounds
+          val spark3 = graft.streaming.CatchUp.profile(
+            SparkSession.builder().master(s"local[$cpus]"), EngineBench.Partitions).getOrCreate()
           spark3.sparkContext.setLogLevel("WARN")
           try {
             System.gc()

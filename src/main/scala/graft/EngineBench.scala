@@ -9,13 +9,15 @@ import org.apache.spark.sql.SparkSession
   * ([[graft.projector.LogSynth]]). Invoked by [[Bench]] per round and as a
   * standalone main for probing.
   *
-  * The catch-up session sizes `spark.sql.shuffle.partitions` down to
-  * `SPARK_GRAFT_ENGINE_PARTITIONS` (default 4): a 2-second poll loop folds
-  * batch-bounded frames, so task count per tiny stage — not parallelism on
-  * big data — dominates; production would set the same knob (or AQE
-  * coalescing) for its trigger cadence.
+  * The session runs the projector profile ([[graft.streaming.CatchUp.profile]])
+  * at a width of [[Partitions]]: a 2-second poll loop folds batch-bounded
+  * frames, so task count per tiny stage — not parallelism on big data —
+  * dominates.
   */
 object EngineBench {
+
+  /** Shuffle and collect width of the engine session. */
+  val Partitions = "4"
 
   private def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else xs.sorted.apply(xs.size / 2)
@@ -376,48 +378,11 @@ object EngineBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_ENGINE_PARTITIONS", "4")
     val sites = sys.env.getOrElse("SPARK_GRAFT_ENGINE_SITES", "4000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-engine-bench")
-      .config("spark.sql.shuffle.partitions", parts)
-      // one CollectLimit job instead of the 1 → 4 → all ramp-up on the
-      // step's bounded collects (see CatchUp.main)
-      .config("spark.sql.limit.initialNumPartitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same knobs as the production CatchUp session (see CatchUp.main):
-      // AQE re-planning and distributed partition discovery only add jobs
-      // at micro-batch frame sizes
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // micro-batch frames are a few hundred rows: per-stage janino
-      // compilation (re-triggered every batch — the IN-set literals make
-      // each plan's generated source unique) costs more than interpreted
-      // evaluation ever saves at this size (StepProbe: dense step 7.9 s →
-      // 6.4 s with codegen off). Production projector sessions pin the
-      // same; SPARK_GRAFT_CODEGEN=true restores codegen for probing.
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "false"))
+    val spark = graft.streaming.CatchUp.profile(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-engine-bench"), Partitions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_TRACE=1: per-batch durationMs decomposition from the
-    // streaming engine (addBatch / walCommit / queryPlanning / ...) — the
-    // first-batch startup attribution tool (VERDICT r7 #7)
-    if (sys.env.get("SPARK_GRAFT_TRACE").contains("1"))
-      spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          import scala.jdk.CollectionConverters._
-          val d = e.progress.durationMs.asScala.toSeq.sortBy(-_._2)
-            .map { case (k, v) => s"$k=$v" }.mkString(" ")
-          System.err.println(s"trace: batch ${e.progress.batchId} " +
-            s"rows=${e.progress.numInputRows} $d")
-        }
-      })
     var last = System.nanoTime()
     val json = run(spark, sites, onBatch = id => {
       val now = System.nanoTime()

@@ -22,13 +22,8 @@ object QueryBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-query-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = SparkEntry.profile(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-query-bench"), cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Bench.warmUp(spark) // identical to the parent suite's warmup by construction

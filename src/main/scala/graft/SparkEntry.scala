@@ -12,6 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** The queries profile: the Spark conf every query-suite session runs
+    * under ([[Bench]], [[QueryBench]], [[Verify]], [[PlanCheck]] and the
+    * test suites). `cpus` is the shuffle width; the caller sets the
+    * master. */
+  def profile(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
+    .config("spark.sql.shuffle.partitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    // events.parquet may carry TIMESTAMP(NANOS); read it as BIGINT nanos
+    // (Tables.events normalizes to µs) instead of erroring
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     graft.queries.Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")

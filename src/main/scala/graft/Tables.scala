@@ -68,7 +68,9 @@ object Tables {
     * parallelism is below the SIZE-DERIVED width — min(cores,
     * ceil(scanBytes/quantum)), floored at 2 so the explicit
     * REPARTITION_BY_NUM stays visible (plan-pinned: AQE must never be
-    * the thing that decides kernel parallelism). The local test files
+    * the thing that decides kernel parallelism) — unless there is only
+    * one core, where a spread adds a shuffle and no parallelism (see
+    * [[spreadWidth]]). The local test files
     * are single-row-group parquet, so every scan arrives as ONE
     * partition and an unrepartitioned kernel runs single-core (r15:
     * measured as the whole cost of pipeline_pii and friends); r16 makes
@@ -87,10 +89,15 @@ object Tables {
   def cpuSpread(df: DataFrame, key: String,
       quantumBytes: Long = SpreadQuantumBytes): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val width = ((bytes + BigInt(quantumBytes - 1)) / BigInt(quantumBytes))
-      .min(BigInt(par)).max(BigInt(2)).toInt
+    val width = spreadWidth(df.queryExecution.optimizedPlan.stats.sizeInBytes, quantumBytes, par)
     if (df.rdd.getNumPartitions >= width) df
     else df.repartition(width, org.apache.spark.sql.functions.col(key))
   }
+
+  /** [[cpuSpread]]'s target width for a `bytes` scan on `par` cores: one
+    * partition per `quantumBytes`, capped at `par` and floored at
+    * min(2, par). */
+  private[graft] def spreadWidth(bytes: BigInt, quantumBytes: Long, par: Int): Int =
+    ((bytes + BigInt(quantumBytes - 1)) / BigInt(quantumBytes))
+      .min(BigInt(par)).max(BigInt(math.min(2, par))).toInt
 }

@@ -29,34 +29,6 @@ object Dedup {
       array_min(transform(base, b => xxhash64(lit(i), b)))): _*)
   }
 
-  /** LSH band keys: the signature split into `bands` rows-per-band groups,
-    * each hashed to one bucket key. ARRAY<STRUCT<band INT, key BIGINT>>.
-    * NOTE: hashes the band slice as one array value — self-consistent,
-    * but NOT the same key space as [[minhashBuckets]] (which hashes the
-    * k long components as separate xxhash64 arguments); use
-    * [[bandKeysFromSignature]] when parity with the batch buckets
-    * matters (the streaming twin does). */
-  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(slice(signature, b * rowsPerBand + 1, rowsPerBand).cast("array<string>")).as("key"))
-    }: _*)
-
-  /** Row-local band keys with arithmetic IDENTICAL to [[minhashBuckets]]:
-    * the band hash is `xxhash64` over the band's `rowsPerBand` LONG
-    * signature components as separate arguments (via `element_at`), so a
-    * signature produced by [[minhashSignature]] lands in exactly the
-    * same (band, key) buckets as the batch aggregate path — the property
-    * the streaming near-dup twin's parity rests on. No aggregation, safe
-    * under `readStream`. Callers should materialize the signature as a
-    * column first (one HOF pass), not inline it here 'bands' times. */
-  def bandKeysFromSignature(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((0 until rowsPerBand).map(i =>
-          element_at(signature, b * rowsPerBand + i + 1)): _*).as("key"))
-    }: _*)
-
   /** Candidate near-dup pairs (idA < idB) from MinHash LSH banding: two
     * docs are candidates if any band collides. Input: (id, shingles).
     *

@@ -55,13 +55,8 @@ object Backfill {
       case _ => sys.error("usage: Backfill <eventsParquet> <outDir> [stateDir]")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-backfill")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.streaming.CatchUp.profile(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-backfill"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val highWater = run(spark, eventsPath, outDir, stateDir)
     println(s"""{"backfill":"done","high_water":$highWater,"out":"$outDir"}""")

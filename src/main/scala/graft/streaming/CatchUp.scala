@@ -117,34 +117,38 @@ object CatchUp {
     q
   }
 
+  /** The projector profile: the Spark conf every projector session runs
+    * under — [[main]], [[graft.projector.Backfill]]'s main, [[graft.EngineBench]]
+    * and the projector specs. `cpus` is the shuffle and collect width; the
+    * caller sets the master. */
+  def profile(b: SparkSession.Builder, cpus: String): SparkSession.Builder = b
+    .config("spark.sql.shuffle.partitions", cpus)
+    // bounded collects (KeySet.fromDf, the fused step-start job) sit on
+    // the 2-second path; the default CollectLimit ramp-up (1 → 4 → all
+    // partitions) turns each into up to 3 driver jobs on frames that
+    // never satisfy the limit early — start at full coverage
+    .config("spark.sql.limit.initialNumPartitions", cpus)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    // the poll loop folds batch-bounded frames: AQE's per-stage re-plan
+    // turns every internal shuffle into its own job (~2.5× the job count
+    // per step) for zero benefit at micro-batch sizes; likewise a
+    // distributed partition-discovery job never pays off on the
+    // touched-bucket reads
+    .config("spark.sql.adaptive.enabled", "false")
+    .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+    // micro-batch frames are a few hundred rows: per-stage janino
+    // compilation (re-triggered every batch — the per-batch IN-set
+    // literals make each plan's generated source unique) costs more than
+    // interpreted evaluation saves at this size (dense step 7.9 s → 6.4 s
+    // with codegen off)
+    .config("spark.sql.codegen.wholeStage", "false")
+
   def main(args: Array[String]): Unit = {
     val Array(eventsDir, stateDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-catchup")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bounded collects (KeySet.fromDf, the fused step-start job) sit on
-      // the 2-second path; the default CollectLimit ramp-up (1 → 4 → all
-      // partitions) turns each into up to 3 driver jobs on frames that
-      // never satisfy the limit early — start at full coverage
-      .config("spark.sql.limit.initialNumPartitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the poll loop folds batch-bounded frames: AQE's per-stage re-plan
-      // turns every internal shuffle into its own job (~2.5× the job count
-      // per step) for zero benefit at micro-batch sizes; likewise a
-      // distributed partition-discovery job never pays off on the
-      // touched-bucket reads. Production projector sessions pin both.
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      // micro-batch frames are a few hundred rows: per-stage janino
-      // compilation (re-triggered every batch by the per-batch IN-set
-      // literals) costs more than interpreted evaluation saves at this
-      // size — see EngineBench.main
-      .config("spark.sql.codegen.wholeStage",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "false"))
-      .getOrCreate()
+    val spark = profile(
+      SparkSession.builder().master(s"local[$cpus]").appName("graft-catchup"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val store = new StateStore(spark, stateDir)

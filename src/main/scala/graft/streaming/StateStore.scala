@@ -404,7 +404,7 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     val tmp = new Path(s"$root/.merge_$table")
     fs.delete(tmp, true)
     // thread-local job description: names the merge in the Spark UI and
-    // in job-timeline probes (StepProbe) — costs nothing on the data path
+    // in job listeners (perfbench step.merge_jobs) — costs nothing on the data path
     spark.sparkContext.setJobDescription(s"graft-merge:$table")
     try merged.write.mode("overwrite").option("compression", StateCodec)
       .partitionBy("bucket").parquet(tmp.toString)

@@ -12,6 +12,19 @@ class PlanQualitySpec extends SparkTestBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString()
 
+  /** Runs a check on the shared bucketed facts with auto-broadcast off —
+    * a tiny sf0.001 orders side would otherwise be broadcast and hide
+    * whether the bucketed layout eliminated the shuffle (the claim that
+    * matters at fact⋈fact scale) — then drops the fact tables. */
+  private def withBucketedFacts(body: => Unit): Unit =
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+    finally {
+      val tag = java.lang.Integer.toHexString(dir.hashCode)
+      spark.sql(s"DROP TABLE IF EXISTS graft_fact_li_$tag")
+      spark.sql(s"DROP TABLE IF EXISTS graft_fact_o_$tag")
+      ()
+    }
+
   test("q2: filters are pushed into the parquet scan and schema is pruned") {
     val p = plan("q2_filter_project")
     assert(p.contains("PushedFilters:"))
@@ -252,13 +265,7 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("q19: bucket-aligned join reads both facts with zero join-key exchanges") {
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBcast = spark.conf.get(bcastKey)
-    // auto-broadcast off: a tiny sf0.001 orders side would otherwise be
-    // broadcast and hide whether the bucketed layout eliminated the
-    // shuffle (the claim that matters at fact⋈fact scale)
-    spark.conf.set(bcastKey, "-1")
-    try {
+    withBucketedFacts {
       val p = plan("q19_bucketed_join")
       assert(!p.contains("Exchange hashpartitioning(l_orderkey") &&
         !p.contains("Exchange hashpartitioning(o_orderkey"),
@@ -268,20 +275,11 @@ class PlanQualitySpec extends SparkTestBase {
       assert(exchanges <= 1, s"expected at most the rollup exchange, got $exchanges:\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a non-broadcast fact join:\n$p")
-    } finally {
-      spark.conf.set(bcastKey, prevBcast)
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_li_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_o_$tag")
-      ()
     }
   }
 
   test("q3 reuses the shared bucketed facts: zero join-key exchanges on the fact join") {
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBcast = spark.conf.get(bcastKey)
-    spark.conf.set(bcastKey, "-1")
-    try {
+    withBucketedFacts {
       // VERDICT r13 #7: the SAME bucket layout q19 writes serves q3's
       // lineitem⋈orders — the fact join must not re-shuffle either side
       // on the key; the only keyed exchanges left belong to the
@@ -292,20 +290,11 @@ class PlanQualitySpec extends SparkTestBase {
         s"q3's fact join must read the bucketed layout exchange-free:\n$p")
       assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
         s"expected a non-broadcast fact join:\n$p")
-    } finally {
-      spark.conf.set(bcastKey, prevBcast)
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_li_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_o_$tag")
-      ()
     }
   }
 
   test("q12 reuses the shared bucketed facts: zero join-key exchanges on the semi join") {
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBcast = spark.conf.get(bcastKey)
-    spark.conf.set(bcastKey, "-1")
-    try {
+    withBucketedFacts {
       // VERDICT r14 #7: the third bucketedFacts consumer — the bloom
       // prefilter and the totalprice predicate are filters (bucket
       // distribution preserved), so the exact semi join must not
@@ -318,12 +307,6 @@ class PlanQualitySpec extends SparkTestBase {
       assert(p.contains("LeftSemi"), s"expected the exact semi join:\n$p")
       assert(p.contains("might_contain") || p.contains("bloom"),
         s"expected the bloom prefilter on the fact side:\n$p")
-    } finally {
-      spark.conf.set(bcastKey, prevBcast)
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_li_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_o_$tag")
-      ()
     }
   }
 
@@ -341,10 +324,7 @@ class PlanQualitySpec extends SparkTestBase {
   }
 
   test("q21 reuses the shared bucketed facts: join AND per-order aggregate exchange-free") {
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBcast = spark.conf.get(bcastKey)
-    spark.conf.set(bcastKey, "-1")
-    try {
+    withBucketedFacts {
       // the fourth bucketedFacts consumer — the status/date predicates
       // are row filters (bucket distribution preserved), and BOTH
       // order-keyed aggregates (per-(order, supplier) dedup, per-order
@@ -366,12 +346,6 @@ class PlanQualitySpec extends SparkTestBase {
         s"expected a non-broadcast fact join:\n$p")
       assert(p.contains("TakeOrderedAndProject"),
         s"top-20 must be a TakeOrdered, not a global sort:\n$p")
-    } finally {
-      spark.conf.set(bcastKey, prevBcast)
-      val tag = java.lang.Integer.toHexString(dir.hashCode)
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_li_$tag")
-      spark.sql(s"DROP TABLE IF EXISTS graft_fact_o_$tag")
-      ()
     }
   }
 

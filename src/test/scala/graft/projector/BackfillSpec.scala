@@ -1,6 +1,6 @@
 package graft.projector
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -9,7 +9,7 @@ import scala.util.Random
 
 /** End-to-end EP1 smoke: envelope parquet in → Backfill.run → 8 parquet
   * tables out, contents matching the simulator. */
-class BackfillSpec extends SparkTestBase {
+class BackfillSpec extends ProjectorTestBase {
 
   test("Backfill.run derives all 8 tables from an envelope parquet") {
     import scala.jdk.CollectionConverters._

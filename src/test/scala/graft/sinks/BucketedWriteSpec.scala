@@ -12,12 +12,9 @@ class BucketedWriteSpec extends SparkTestBase {
 
   test("bucket-aligned join plans with no exchange and matches the shuffled join") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevBcast = spark.conf.get(bcastKey)
     // force a non-broadcast join so the exchange-elimination claim is
     // actually exercised (broadcast would hide it)
-    spark.conf.set(bcastKey, "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
       val o = Tables.orders(spark, dir)
@@ -44,7 +41,6 @@ class BucketedWriteSpec extends SparkTestBase {
       assert(!ap.contains("Exchange hashpartitioning"),
         s"bucket-keyed aggregation must not shuffle:\n$ap")
     } finally {
-      spark.conf.set(bcastKey, prevBcast)
       spark.sql("DROP TABLE IF EXISTS li_bucketed")
       spark.sql("DROP TABLE IF EXISTS o_bucketed")
       val root = java.nio.file.Paths.get(tmp)

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen}
 import graft.streaming.{CatchUp, Incremental, StateStore}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
@@ -19,7 +19,7 @@ import scala.util.Random
   * restart folding new files, convergence of the applied FakeLake state
   * to the one-shot batch fold on all 8 tables, and statement-log replay
   * as a no-op. */
-class MergeSinkStreamSpec extends SparkTestBase {
+class MergeSinkStreamSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

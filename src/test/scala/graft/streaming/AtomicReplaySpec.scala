@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, Sim}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
@@ -16,7 +16,7 @@ import java.nio.file.Files
   * the replay converge to the one-shot result, and a redelivery of a
   * COMPLETED batch must be skipped outright.
   */
-class AtomicReplaySpec extends SparkTestBase {
+class AtomicReplaySpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

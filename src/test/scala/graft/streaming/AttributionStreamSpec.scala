@@ -14,21 +14,6 @@ import org.apache.spark.sql.streaming.OutputMode
 class AttributionStreamSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   private def batchCredits(evs: Seq[AttributionStream.TouchEvent]): Set[(Long, Long, String, Long)] =
     graft.queries.EventFold.attributionCreditsOf(
       evs.map(e => (e.userId, e.eventId, e.tsUs, e.eventType,
@@ -61,7 +46,7 @@ class AttributionStreamSpec extends SparkTestBase {
 
   private val day = 86400L * 1000000L
 
-  test("edge fixture: same-ts touch, lookback expiry, cold purchase, touch replacement") { withRocks {
+  test("edge fixture: same-ts touch, lookback expiry, cold purchase, touch replacement") { withConf(RocksDb) {
     import AttributionStream.TouchEvent
     val evs = Seq(
       // u1: click at t, purchase at SAME ts with larger event id — credited
@@ -88,7 +73,7 @@ class AttributionStreamSpec extends SparkTestBase {
       byEid(21L) === "none" && byEid(30L) === "none" && byEid(23L) === "click")
   } }
 
-  test("random in-order feeds: chunked streaming equals the batch window carry") { withRocks {
+  test("random in-order feeds: chunked streaming equals the batch window carry") { withConf(RocksDb) {
     val rnd = new scala.util.Random(53)
     import AttributionStream.TouchEvent
     val types = Seq("click", "view", "purchase", "signup", "error")
@@ -102,7 +87,7 @@ class AttributionStreamSpec extends SparkTestBase {
     assert(streamCredits(chunks) === expected)
   } }
 
-  test("out-of-order input fails fast instead of silently mis-crediting") { withRocks {
+  test("out-of-order input fails fast instead of silently mis-crediting") { withConf(RocksDb) {
     import AttributionStream.TouchEvent
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[TouchEvent]

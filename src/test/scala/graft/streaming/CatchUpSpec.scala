@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
@@ -16,7 +16,7 @@ import scala.util.Random
   * log is never handed to the engine); IncrementalScanSpec additionally
   * asserts the I/O volume.
   */
-class CatchUpSpec extends SparkTestBase {
+class CatchUpSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

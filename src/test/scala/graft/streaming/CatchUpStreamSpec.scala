@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen}
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -17,7 +17,7 @@ import scala.util.Random
   * backfill across all 8 tables certifies the exactly-once claim through
   * the streaming machinery itself, not just through direct step calls.
   */
-class CatchUpStreamSpec extends SparkTestBase {
+class CatchUpStreamSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

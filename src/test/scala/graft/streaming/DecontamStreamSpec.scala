@@ -65,13 +65,10 @@ class DecontamStreamSpec extends SparkTestBase {
       (1L, "alpha beta gamma delta zeta"),
       (2L, "x y z w v u"),
       (3L, "beta gamma delta epsilon mu")).toDF("doc_id", "text")
-    val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevThreshold = spark.conf.getOption(thresholdKey)
     // auto-broadcast OFF: a tiny test probe would otherwise be broadcast
     // by Catalyst on BOTH sides of the gate — with it disabled, only the
     // gate's PINNED broadcast() hint can produce a BroadcastHashJoin
-    spark.conf.set(thresholdKey, "-1")
-    try {
+    try withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // same code path batch frames take — inspect the executed plan
       val bcast = DecontamStream.flaggedCounts(corpus, "doc_id", "text", probe, w = 4)
       val pB = bcast.queryExecution.executedPlan.toString
@@ -107,10 +104,6 @@ class DecontamStreamSpec extends SparkTestBase {
         ()
       }
     } finally {
-      prevThreshold match {
-        case Some(v) => spark.conf.set(thresholdKey, v)
-        case None => spark.conf.unset(thresholdKey)
-      }
       probe.unpersist()
       ()
     }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{EventLog, Sim}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
@@ -12,7 +12,7 @@ import java.nio.file.Files
   * sparse, and the 2-second loop's cost must be proportional to what
   * actually changed, not to the number of projected tables.
   */
-class FamilySkipSpec extends SparkTestBase {
+class FamilySkipSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen, Sim}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -20,7 +20,7 @@ import scala.util.Random
   * end-to-end through a step — the path StepDistKeysSpec's blown-bound
   * scenario cannot reach.
   */
-class FusedKeysSpec extends SparkTestBase {
+class FusedKeysSpec extends ProjectorTestBase {
 
   private val envelopeSchema =
     StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")

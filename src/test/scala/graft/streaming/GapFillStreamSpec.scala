@@ -15,23 +15,8 @@ import org.apache.spark.sql.streaming.OutputMode
 class GapFillStreamSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("streamed gap-fill equals the batch dense grid, final hours closed by watermark") {
-    withRocks {
+    withConf(RocksDb) {
       val dir = "/root/testdata/sf0.001"
       // the batch query's exact input slice, cents derived via the same
       // DECIMAL(18,2) path the batch operator uses
@@ -90,7 +75,7 @@ class GapFillStreamSpec extends SparkTestBase {
   }
 
   test("an event behind the watermark-closed grid is dropped, never double-emitted") {
-    withRocks {
+    withConf(RocksDb) {
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val hourUs = GapFillStream.HourUs
       def evAt(user: Long, eid: Long, tsUs: Long) =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen, Sim}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
@@ -20,7 +20,7 @@ import scala.util.Random
   * (the reference's dehydrate→`_bulkMode` flip,
   * `RelationalDatabaseProjection.cs:460-495`, `Worker.cs:32-48`).
   */
-class HandoffSpec extends SparkTestBase {
+class HandoffSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

@@ -13,21 +13,6 @@ import org.apache.spark.sql.streaming.OutputMode
 class HeavyHitterStreamSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   // deterministic skew: group g's key k appears scale/k times
   private def events(groups: Seq[String], nKeys: Int, scale: Int): Seq[HeavyHitterStream.KeyedEvent] =
     groups.flatMap { g =>
@@ -36,7 +21,7 @@ class HeavyHitterStreamSpec extends SparkTestBase {
     }
 
   private def streamTopK(batches: Seq[Seq[HeavyHitterStream.KeyedEvent]],
-      capacity: Int, k: Int): Map[String, Seq[(Long, Long, Long)]] = withRocks {
+      capacity: Int, k: Int): Map[String, Seq[(Long, Long, Long)]] = withConf(RocksDb) {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[HeavyHitterStream.KeyedEvent]
     val q = HeavyHitterStream.topK(input.toDS(), capacity, k)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -18,7 +18,7 @@ import scala.util.Random
   *   2. [[KeySet]] stays driver-resident under the cap, spills to a
   *      distributed frame above it, and unions without losing keys.
   */
-class KeySetSpec extends SparkTestBase {
+class KeySetSpec extends ProjectorTestBase {
 
   test("driver-side bucket ids match the column expression for engine key shapes") {
     val dir = Files.createTempDirectory("graft-keyset").toFile.getPath

@@ -14,21 +14,6 @@ import org.apache.spark.sql.streaming.OutputMode
 class PathStreamSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   private def batchTrigrams(evs: Seq[PathStream.PathEvent]): Set[(Long, Long, String, String, String)] =
     graft.queries.EventFold.topPathTrigramsOf(
       evs.map(e => (e.userId, e.eventId, e.eventType))
@@ -57,7 +42,7 @@ class PathStreamSpec extends SparkTestBase {
     }
   }
 
-  test("chunked streaming equals the batch lag-window frame on random journeys") { withRocks {
+  test("chunked streaming equals the batch lag-window frame on random journeys") { withConf(RocksDb) {
     val rnd = new scala.util.Random(71)
     val types = Seq("click", "view", "purchase", "signup", "error")
     val evs = (1L to 300L).map { i =>
@@ -71,7 +56,7 @@ class PathStreamSpec extends SparkTestBase {
     assert(streamTrigrams(evs.grouped(41).toSeq) === expected)
   } }
 
-  test("journeys shorter than 3 events emit nothing; the third event emits") { withRocks {
+  test("journeys shorter than 3 events emit nothing; the third event emits") { withConf(RocksDb) {
     import PathStream.PathEvent
     val evs = Seq(PathEvent(1L, 1L, "a"), PathEvent(1L, 2L, "b"),
       PathEvent(2L, 3L, "x"), PathEvent(1L, 4L, "c"))
@@ -79,7 +64,7 @@ class PathStreamSpec extends SparkTestBase {
     assert(got === Set((1L, 4L, "a", "b", "c")))
   } }
 
-  test("trigram stream feeds HeavyHitterStream: live top paths equal the batch rollup (exact regime)") { withRocks {
+  test("trigram stream feeds HeavyHitterStream: live top paths equal the batch rollup (exact regime)") { withConf(RocksDb) {
     // the documented composition: PathStream extracts, SpaceSaving
     // summarizes — keyed by the path string's hash (capacity ≥ distinct
     // paths ⇒ exact counts, err 0, so the live top-k must equal the
@@ -129,7 +114,7 @@ class PathStreamSpec extends SparkTestBase {
     }
   } }
 
-  test("out-of-order input fails fast instead of silently re-windowing") { withRocks {
+  test("out-of-order input fails fast instead of silently re-windowing") { withConf(RocksDb) {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[PathStream.PathEvent]
     val q = PathStream.trigrams(input.toDS())

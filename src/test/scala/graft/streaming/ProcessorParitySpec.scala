@@ -22,7 +22,7 @@ class ProcessorParitySpec extends SparkTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 
-  test("shared families agree across processors, incremental step, and batch fold") {
+  test("shared families agree across processors, incremental step, and batch fold") { withConf(RocksDb) {
     import scala.jdk.CollectionConverters._
 
     val events = LogGen.scenario(new Random(87))
@@ -42,8 +42,6 @@ class ProcessorParitySpec extends SparkTestBase {
     val inDir = new java.io.File(Files.createTempDirectory("graft-parity-in").toFile, "in")
     inDir.mkdirs()
     toDf(rows).coalesce(1).write.parquet(inDir.getPath + "/all")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val raw = spark.readStream.schema(envelopeSchema).parquet(inDir.getPath + "/*")
     val q = Processors.installationCdc(
         Processors.installationEvents(Processors.decode(raw)))
@@ -51,7 +49,6 @@ class ProcessorParitySpec extends SparkTestBase {
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)
     q.stop()
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
     type InstRow = (Option[String], Option[String], Option[String], Option[String])
     def opt(r: Row, i: Int): Option[String] = Option(r.getString(i))
@@ -86,5 +83,5 @@ class ProcessorParitySpec extends SparkTestBase {
       val want = Derivations.deriveAll(ev)(t)
       assert(normalized(got) === normalized(want), s"span-family table $t diverged")
     }
-  }
+  } }
 }

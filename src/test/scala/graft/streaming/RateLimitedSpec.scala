@@ -17,13 +17,7 @@ import scala.util.Random
 class RateLimitedSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("chunked stream admission equals the batch row_number rewrite") {
-    // test-local provider override (ADVICE r10): restored in the finally
-    // below so it cannot leak into later streaming suites in this JVM
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("chunked stream admission equals the batch row_number rewrite") { withConf(RocksDb) {
     val rnd = new Random(11)
     val max = 2
     // few keys, many events → most keys exceed the quota
@@ -54,10 +48,6 @@ class RateLimitedSpec extends SparkTestBase {
     } finally {
       q.stop()
       spark.sql("DROP VIEW IF EXISTS rate_limited")
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
-  }
+  } }
 }

@@ -17,13 +17,7 @@ import scala.util.Random
 class SlidingAggStreamSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("chunked stream rolling agg equals the batch RANGE frame") {
-    // test-local provider override (transformWithState needs RocksDB's
-    // column families); restored in the finally below
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("chunked stream rolling agg equals the batch RANGE frame") { withConf(RocksDb) {
     val rnd = new Random(13)
     val hourUs = 3600L * 1000000L
     // 5 keys × 120 events over ~40 distinct timestamps spanning several
@@ -70,18 +64,10 @@ class SlidingAggStreamSpec extends SparkTestBase {
     } finally {
       q.stop()
       spark.sql("DROP VIEW IF EXISTS sliding_agg")
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
-  }
+  } }
 
-  test("acceptEqualTs: a peer group split across batches re-emits and converges to the batch frame (VERDICT r13 #9)") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("acceptEqualTs: a peer group split across batches re-emits and converges to the batch frame (VERDICT r13 #9)") { withConf(RocksDb) {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val hourUs = 3600L * 1000000L
     val t0 = 10L * 1000000L
@@ -115,18 +101,10 @@ class SlidingAggStreamSpec extends SparkTestBase {
     } finally {
       q.stop()
       spark.sql("DROP VIEW IF EXISTS sliding_agg_eqts")
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
-  }
+  } }
 
-  test("an out-of-order micro-batch fails fast instead of corrupting sums") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  test("an out-of-order micro-batch fails fast instead of corrupting sums") { withConf(RocksDb) {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[SlidingAgg.SlideEvent]
     val q = SlidingAgg.rolling(input.toDS(), 3600L * 1000000L)
@@ -145,10 +123,6 @@ class SlidingAggStreamSpec extends SparkTestBase {
     } finally {
       q.stop()
       spark.sql("DROP VIEW IF EXISTS sliding_agg_ooo")
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
-  }
+  } }
 }

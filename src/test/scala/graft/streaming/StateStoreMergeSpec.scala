@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -15,7 +15,7 @@ import scala.util.Random
   * overwrite done, emptied-bucket cleanup not yet — stale files for
   * deleted keys still on disk when the merge re-runs).
   */
-class StateStoreMergeSpec extends SparkTestBase {
+class StateStoreMergeSpec extends ProjectorTestBase {
 
   private val schema = StructType.fromDDL("k STRING, v INT")
 

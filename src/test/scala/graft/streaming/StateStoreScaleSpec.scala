@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -15,7 +15,7 @@ import java.nio.file.Files
   * at 100× state a 3-key batch on a 2-second trigger would rewrite
   * gigabytes.
   */
-class StateStoreScaleSpec extends SparkTestBase {
+class StateStoreScaleSpec extends ProjectorTestBase {
 
   private val schema = StructType.fromDDL("k STRING, v STRING")
 

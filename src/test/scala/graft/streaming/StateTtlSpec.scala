@@ -14,23 +14,8 @@ import org.apache.spark.sql.streaming.{OutputMode, TTLConfig}
 class StateTtlSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def withRocks[A](body: => A): A = {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    try body finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
-  }
-
   test("rate-limiter TTL: quota state evicts after the horizon, in-horizon admission unchanged") {
-    withRocks {
+    withConf(RocksDb) {
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       // NOT processAllAvailable / AvailableNow: in TimeMode.ProcessingTime
       // the stateful operator requests a batch per trigger to advance the
@@ -83,7 +68,7 @@ class StateTtlSpec extends SparkTestBase {
   }
 
   test("gap-fill event-time eviction: carry drops after the horizon, retained grid unchanged") {
-    withRocks {
+    withConf(RocksDb) {
       implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val hourUs = GapFillStream.HourUs
       def evAt(user: Long, eid: Long, tsUs: Long, cents: Long) =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.ProjectorTestBase
 import graft.projector.{Derivations, EventLog, LogGen}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
@@ -18,7 +18,7 @@ import scala.util.Random
   * depend on which representation a key set happens to use, so the whole
   * multi-batch catch-up must equal the one-shot fold exactly as it does
   * for driver-resident keys (CatchUpSpec). */
-class StepDistKeysSpec extends SparkTestBase {
+class StepDistKeysSpec extends ProjectorTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 

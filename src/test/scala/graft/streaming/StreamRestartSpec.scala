@@ -9,495 +9,214 @@ import org.apache.spark.sql.streaming.OutputMode
   * twins: a stopped query restarted against the SAME checkpoint must
   * resume its keyed state (not reprocess, not forget) — the property
   * that makes the twins operational services rather than single-run
-  * demos. The fixture splits one user's funnel ACROSS the restart
-  * (signup before, view + purchase after), so a fresh-state restart
-  * could not produce the converted funnel and a reprocessing restart
-  * would double-emit; the parquet sink records exactly what each run
-  * committed. */
+  * demos. Each fixture splits one key's history ACROSS the restart, so
+  * a fresh-state restart could not produce the expected rows and a
+  * reprocessing restart would double-emit; the sink records exactly what
+  * each run committed. */
 class StreamRestartSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val providerKey = "spark.sql.streaming.stateStore.providerClass"
-  private val rocks =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private implicit lazy val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-  test("funnel twin resumes keyed state across a query restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[FunnelStream.FunnelEvent]
-      def start() = FunnelStream.funnel(input.toDS())
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-
-      // run 1: u1 completes signup only; u2 completes the whole funnel
-      val q1 = start()
-      input.addData(Seq(
-        FunnelStream.FunnelEvent(1L, 10L, "signup"),
-        FunnelStream.FunnelEvent(2L, 11L, "signup"),
-        FunnelStream.FunnelEvent(2L, 12L, "view"),
-        FunnelStream.FunnelEvent(2L, 13L, "purchase")))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // run 2 (same checkpoint): u1's view + purchase arrive — they only
-      // convert if u1's signup state survived the restart
-      val q2 = start()
-      input.addData(Seq(
-        FunnelStream.FunnelEvent(1L, 14L, "view"),
-        FunnelStream.FunnelEvent(1L, 15L, "purchase")))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val rows = spark.read.parquet(out)
-        .select(col("userId"), col("signupId"), col("viewId"),
-          col("purchaseId"), col("stage"))
-        .collect()
-        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]),
-          Option(r.get(3)).map(_.asInstanceOf[Long]), r.getInt(4)))
-
-      // u1: exactly TWO emissions — stage 1 from run 1, stage 3 from run 2
-      // (resumed state; a fresh-state restart would emit stage 0/ignore the
-      // view, a reprocessing restart would emit the signup row twice)
-      val u1 = rows.filter(_._1 == 1L).sortBy(_._5)
-      assert(u1.toSeq === Seq(
-        (1L, Some(10L), None, None, 1),
-        (1L, Some(10L), Some(14L), Some(15L), 3)))
-      // u2: one emission from run 1, untouched by run 2
-      assert(rows.filter(_._1 == 2L).toSeq ===
-        Seq((2L, Some(11L), Some(12L), Some(13L), 3)))
-      // and the resumed final state matches the batch fold on the full feed
-      val batch = graft.queries.EventFold.funnelOf(
-        Seq((1L, 10L, "signup"), (1L, 14L, "view"), (1L, 15L, "purchase"),
-          (2L, 11L, "signup"), (2L, 12L, "view"), (2L, 13L, "purchase"))
-          .toDF("user_id", "event_id", "event_type"))
-        .select(col("user_id"), col("signup_id"), col("view_id"),
-          col("purchase_id"), col("stage"))
-        .collect()
-        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]),
-          Option(r.get(3)).map(_.asInstanceOf[Long]), r.getInt(4)))
-        .toSet
-      val finalPerUser = rows.groupBy(_._1).map { case (_, rs) =>
-        rs.maxBy(t => (t._5, t._2.getOrElse(-1L), t._3.getOrElse(-1L),
-          t._4.getOrElse(-1L)))
-      }.toSet
-      assert(finalPerUser === batch)
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
+  /** Registers a restart case: `body(ckpt, out)` runs under the RocksDB
+    * state store provider with a fresh checkpoint and output path. */
+  private def restartTest(name: String)(body: (String, String) => Unit): Unit =
+    test(name) {
+      withConf(RocksDb) {
+        val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+        try body(s"$base/ckpt", s"$base/out")
+        finally { org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)); () }
       }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
     }
+
+  restartTest("gap-fill twin re-arms its in-flight close timer across a restart (VERDICT r13 #4)") { (ckpt, out) =>
+    val hourUs = GapFillStream.HourUs
+    def evAt(user: Long, eid: Long, tsUs: Long, cents: Long) =
+      GapFillStream.GapEvent(user, eid, tsUs, cents,
+        new java.sql.Timestamp(tsUs / 1000L))
+    val input = MemoryStream[GapFillStream.GapEvent]
+    def start() = GapFillStream.gapFill(
+        input.toDS().withWatermark("ts", "0 seconds"))
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
+
+    // run 1: user 1's hour 0 opens and its close timer ARMS (watermark
+    // is still mid-hour, so nothing emits) — then the query stops with
+    // the timer in flight
+    val q1 = start()
+    input.addData(Seq(evAt(1L, 1L, hourUs / 2, 100L)))
+    q1.processAllAvailable()
+    q1.stop()
+    val afterRun1 =
+      if (new java.io.File(out).exists) spark.read.parquet(out).count() else 0L
+    assert(afterRun1 === 0L, "hour 0 must still be open at the stop")
+
+    // run 2 (same checkpoint): only a watermark-advancing sentinel —
+    // hour 0 can close ONLY if the restored state re-armed the
+    // event-time timer from the checkpoint
+    val q2 = start()
+    input.addData(Seq(evAt(99L, 2L, 10L * hourUs, 0L)))
+    q2.processAllAvailable()
+
+    // still run 2: a much later event for user 1 — the forward-fill
+    // carry must resume from the timer-closed hour (gap rows 1..11
+    // carry 100), and hour 0 must NOT re-emit
+    input.addData(Seq(evAt(1L, 3L, 12L * hourUs + 1L, 200L)))
+    q2.processAllAvailable()
+    // close hour 12 via a further sentinel hour
+    input.addData(Seq(evAt(99L, 4L, 20L * hourUs, 0L)))
+    q2.processAllAvailable()
+    q2.stop()
+
+    val rows = spark.read.parquet(out)
+      .select(col("userId"), col("hour"), col("nEvents"), col("vFillCents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .filter(_._1 == 1L)
+    // exactly-once grid: hour 0 closed by the RESUMED timer, gaps
+    // 1..11 forward-fill the carry, hour 12 closes normally
+    val expected =
+      Seq((1L, 0L, 1L, 100L)) ++
+      (1L to 11L).map(h => (1L, h, 0L, 100L)) ++
+      Seq((1L, 12L, 1L, 200L))
+    assert(rows.sortBy(_._2).toSeq === expected,
+      s"grid mismatch: ${rows.sortBy(_._2).toSeq}")
+    assert(rows.count(_._2 == 0L) === 1, "hour 0 must emit exactly once")
   }
 
-  test("gap-fill twin re-arms its in-flight close timer across a restart (VERDICT r13 #4)") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_gf").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val hourUs = GapFillStream.HourUs
-      def evAt(user: Long, eid: Long, tsUs: Long, cents: Long) =
-        GapFillStream.GapEvent(user, eid, tsUs, cents,
-          new java.sql.Timestamp(tsUs / 1000L))
-      val input = MemoryStream[GapFillStream.GapEvent]
-      def start() = GapFillStream.gapFill(
-          input.toDS().withWatermark("ts", "0 seconds"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+  restartTest("sliding-agg twin's window BUFFER (list state) survives a query restart") { (ckpt, out) =>
+    val hourUs = 3600L * 1000000L
+    val input = MemoryStream[SlidingAgg.SlideEvent]
+    def start() = SlidingAgg.rolling(input.toDS(), hourUs)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      // run 1: user 1's hour 0 opens and its close timer ARMS (watermark
-      // is still mid-hour, so nothing emits) — then the query stops with
-      // the timer in flight
-      val q1 = start()
-      input.addData(Seq(evAt(1L, 1L, hourUs / 2, 100L)))
-      q1.processAllAvailable()
-      q1.stop()
-      val afterRun1 =
-        if (new java.io.File(out).exists) spark.read.parquet(out).count() else 0L
-      assert(afterRun1 === 0L, "hour 0 must still be open at the stop")
+    // run 1: two events 30 min apart — both in each other's window
+    val q1 = start()
+    input.addData(Seq(SlidingAgg.SlideEvent("k", 1L, 0L, 100L),
+      SlidingAgg.SlideEvent("k", 2L, hourUs / 2, 200L)))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): only a watermark-advancing sentinel —
-      // hour 0 can close ONLY if the restored state re-armed the
-      // event-time timer from the checkpoint
-      val q2 = start()
-      input.addData(Seq(evAt(99L, 2L, 10L * hourUs, 0L)))
-      q2.processAllAvailable()
+    // run 2 (same checkpoint): an event 50 min after the second — its
+    // trailing hour still contains event 2 but not event 1, which only
+    // a RECOVERED buffer (not a fresh one) can know
+    val q2 = start()
+    input.addData(Seq(
+      SlidingAgg.SlideEvent("k", 3L, hourUs / 2 + 50L * 60L * 1000000L, 400L)))
+    q2.processAllAvailable()
+    q2.stop()
 
-      // still run 2: a much later event for user 1 — the forward-fill
-      // carry must resume from the timer-closed hour (gap rows 1..11
-      // carry 100), and hour 0 must NOT re-emit
-      input.addData(Seq(evAt(1L, 3L, 12L * hourUs + 1L, 200L)))
-      q2.processAllAvailable()
-      // close hour 12 via a further sentinel hour
-      input.addData(Seq(evAt(99L, 4L, 20L * hourUs, 0L)))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val rows = spark.read.parquet(out)
-        .select(col("userId"), col("hour"), col("nEvents"), col("vFillCents"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .filter(_._1 == 1L)
-      // exactly-once grid: hour 0 closed by the RESUMED timer, gaps
-      // 1..11 forward-fill the carry, hour 12 closes normally
-      val expected =
-        Seq((1L, 0L, 1L, 100L)) ++
-        (1L to 11L).map(h => (1L, h, 0L, 100L)) ++
-        Seq((1L, 12L, 1L, 200L))
-      assert(rows.sortBy(_._2).toSeq === expected,
-        s"grid mismatch: ${rows.sortBy(_._2).toSeq}")
-      assert(rows.count(_._2 == 0L) === 1, "hour 0 must emit exactly once")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val rows = spark.read.parquet(out)
+      .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(rows === Set((1L, 1L, 100L), (2L, 2L, 300L), (3L, 2L, 600L)),
+      s"window buffer must recover across the restart: $rows")
   }
 
-  test("sliding-agg twin's window BUFFER (list state) survives a query restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_sa").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val hourUs = 3600L * 1000000L
-      val input = MemoryStream[SlidingAgg.SlideEvent]
-      def start() = SlidingAgg.rolling(input.toDS(), hourUs)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+  restartTest("rate-limited twin's admission counter survives a query restart (VERDICT r14 #4)") { (ckpt, out) =>
+    val input = MemoryStream[RateLimited.AdmitEvent]
+    def start() = RateLimited.admitFirst(input.toDS(), max = 3)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      // run 1: two events 30 min apart — both in each other's window
-      val q1 = start()
-      input.addData(Seq(SlidingAgg.SlideEvent("k", 1L, 0L, 100L),
-        SlidingAgg.SlideEvent("k", 2L, hourUs / 2, 200L)))
-      q1.processAllAvailable()
-      q1.stop()
+    // run 1: key a admits 2 of its 3-event quota; key b exhausts it
+    val q1 = start()
+    input.addData(Seq(
+      RateLimited.AdmitEvent("a", 1L), RateLimited.AdmitEvent("a", 2L),
+      RateLimited.AdmitEvent("b", 1L), RateLimited.AdmitEvent("b", 2L),
+      RateLimited.AdmitEvent("b", 3L), RateLimited.AdmitEvent("b", 4L)))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): an event 50 min after the second — its
-      // trailing hour still contains event 2 but not event 1, which only
-      // a RECOVERED buffer (not a fresh one) can know
-      val q2 = start()
-      input.addData(Seq(
-        SlidingAgg.SlideEvent("k", 3L, hourUs / 2 + 50L * 60L * 1000000L, 400L)))
-      q2.processAllAvailable()
-      q2.stop()
+    // run 2 (same checkpoint): a has ONE slot left — seq 10 admits at
+    // rn 3, seq 11 rejects (fresh state would admit both at rn 1/2);
+    // b is exhausted — seq 12 rejects (fresh state would admit it)
+    val q2 = start()
+    input.addData(Seq(
+      RateLimited.AdmitEvent("a", 10L), RateLimited.AdmitEvent("a", 11L),
+      RateLimited.AdmitEvent("b", 12L)))
+    q2.processAllAvailable()
+    q2.stop()
 
-      val rows = spark.read.parquet(out)
-        .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(rows === Set((1L, 1L, 100L), (2L, 2L, 300L), (3L, 2L, 600L)),
-        s"window buffer must recover across the restart: $rows")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val got = spark.read.parquet(out)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got === Set(
+      ("a", 1L, 1), ("a", 2L, 2), ("a", 10L, 3),
+      ("b", 1L, 1), ("b", 2L, 2), ("b", 3L, 3)))
   }
 
-  test("cohort twin keeps the ORIGINAL cohort week across a restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_co").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val weekUs = CohortStream.WeekUs
-      val input = MemoryStream[CohortStream.CohortEvent]
-      def start() = CohortStream.weekHits(input.toDS())
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-
-      // run 1: user 7 first active in week 2
-      val q1 = start()
-      input.addData(Seq(CohortStream.CohortEvent(7L, 2L * weekUs + 5L)))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // run 2: activity in weeks 2 (already emitted — must not re-emit)
-      // and 5 — the week-5 hit must carry cohort week 2, which only the
-      // recovered state knows (fresh state would call week 5 the cohort)
-      val q2 = start()
-      input.addData(Seq(CohortStream.CohortEvent(7L, 2L * weekUs + 9L),
-        CohortStream.CohortEvent(7L, 5L * weekUs + 1L)))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val rows = spark.read.parquet(out)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(rows === Set((7L, 2L, 2L), (7L, 2L, 5L)),
-        s"cohort week must survive the restart and week 2 must not double-emit: $rows")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
-  }
-
-  test("near-dup twin's bucket representatives survive a query restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_nd").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[NearDupStream.BucketRow]
-      def start() = NearDupStream.candidatePairs(input.toDS())
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-
-      // run 1: doc 1 claims bucket (0, 7); doc 2 collides → pair (1, 2)
-      val q1 = start()
-      input.addData(Seq(NearDupStream.BucketRow(0, 7L, 1L),
-        NearDupStream.BucketRow(0, 7L, 2L)))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // run 2 (same checkpoint): doc 3 hits the bucket — it must pair
-      // with the RECOVERED representative 1, not claim the bucket fresh
-      val q2 = start()
-      input.addData(Seq(NearDupStream.BucketRow(0, 7L, 3L)))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val pairs = spark.read.parquet(out)
-        .select(col("repId"), col("docId"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs === Set((1L, 2L), (1L, 3L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
-  }
-
-  test("rate-limited twin's admission counter survives a query restart (VERDICT r14 #4)") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_rl").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[RateLimited.AdmitEvent]
-      def start() = RateLimited.admitFirst(input.toDS(), max = 3)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-
-      // run 1: key a admits 2 of its 3-event quota; key b exhausts it
-      val q1 = start()
-      input.addData(Seq(
-        RateLimited.AdmitEvent("a", 1L), RateLimited.AdmitEvent("a", 2L),
-        RateLimited.AdmitEvent("b", 1L), RateLimited.AdmitEvent("b", 2L),
-        RateLimited.AdmitEvent("b", 3L), RateLimited.AdmitEvent("b", 4L)))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // run 2 (same checkpoint): a has ONE slot left — seq 10 admits at
-      // rn 3, seq 11 rejects (fresh state would admit both at rn 1/2);
-      // b is exhausted — seq 12 rejects (fresh state would admit it)
-      val q2 = start()
-      input.addData(Seq(
-        RateLimited.AdmitEvent("a", 10L), RateLimited.AdmitEvent("a", 11L),
-        RateLimited.AdmitEvent("b", 12L)))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val got = spark.read.parquet(out)
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet
-      assert(got === Set(
-        ("a", 1L, 1), ("a", 2L, 2), ("a", 10L, 3),
-        ("b", 1L, 1), ("b", 2L, 2), ("b", 3L, 3)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
-  }
-
-  test("session twin merges a post-restart event into the recovered in-flight session") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_sess").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
+  restartTest("session twin merges a post-restart event into the recovered in-flight session") { (ckpt, out) =>
     def us(sec: Long) = sec * 1000000L
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[(Long, Long, Double)]
-      def start() = Sessionized.userSessions(
-          input.toDF().toDF("ts_us", "user_id", "value"),
-          gap = "30 seconds", lateness = "0 seconds")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+    val input = MemoryStream[(Long, Long, Double)]
+    def start() = Sessionized.userSessions(
+        input.toDF().toDF("ts_us", "user_id", "value"),
+        gap = "30 seconds", lateness = "0 seconds")
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      // run 1: u1's session is IN FLIGHT (events at 0 s and 10 s; closes
-      // at 40 s; the watermark stops at 10 s, so nothing is emitted)
-      val q1 = start()
-      input.addData((us(0), 1L, 1.0), (us(10), 1L, 2.0))
-      q1.processAllAvailable()
-      q1.stop()
+    // run 1: u1's session is IN FLIGHT (events at 0 s and 10 s; closes
+    // at 40 s; the watermark stops at 10 s, so nothing is emitted)
+    val q1 = start()
+    input.addData((us(0), 1L, 1.0), (us(10), 1L, 2.0))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): u1's 20 s event must MERGE into the
-      // recovered session (fresh state would open a new session at 20 s);
-      // the 500 s row advances the watermark past the merged close (50 s)
-      // so exactly one finalized u1 session emits
-      val q2 = start()
-      input.addData((us(20), 1L, 4.0), (us(500), 9L, 9.0))
-      q2.processAllAvailable()
-      q2.stop()
+    // run 2 (same checkpoint): u1's 20 s event must MERGE into the
+    // recovered session (fresh state would open a new session at 20 s);
+    // the 500 s row advances the watermark past the merged close (50 s)
+    // so exactly one finalized u1 session emits
+    val q2 = start()
+    input.addData((us(20), 1L, 4.0), (us(500), 9L, 9.0))
+    q2.processAllAvailable()
+    q2.stop()
 
-      val got = spark.read.parquet(out)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-        .filter(_._1 == 1L).toSet
-      assert(got === Set((1L, us(0), us(50), 3L, 7.0)),
-        s"expected ONE merged session spanning the restart, got: $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val got = spark.read.parquet(out)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+      .filter(_._1 == 1L).toSet
+    assert(got === Set((1L, us(0), us(50), 3L, 7.0)),
+      s"expected ONE merged session spanning the restart, got: $got")
   }
 
-  test("dedup twin drops a post-restart duplicate against recovered state") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_dd").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[(Long, String)]
-      def start() = DedupStream.firstPerText(
-          input.toDF().toDF("sec", "text")
-            .withColumn("ts", timestamp_seconds(col("sec"))),
-          "ts", "text", lateness = "10 minutes")
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
-
-      // run 1: alpha's first occurrence is kept and becomes state
-      val q1 = start()
-      input.addData((10L, "alpha"), (11L, "beta"))
-      q1.processAllAvailable()
-      q1.stop()
-
-      // run 2 (same checkpoint): alpha again INSIDE the watermark window —
-      // recovered state must drop it (fresh state would keep it as a new
-      // first occurrence); gamma is genuinely new and passes
-      val q2 = start()
-      input.addData((20L, "alpha"), (21L, "gamma"))
-      q2.processAllAvailable()
-      q2.stop()
-
-      val got = spark.read.parquet(out)
-        .select(col("sec"), col("text")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      assert(got === Seq((10L, "alpha"), (11L, "beta"), (21L, "gamma")))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
-  }
-
-  test("attribution twin credits a post-restart purchase from the recovered touch") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_attr").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
+  restartTest("attribution twin credits a post-restart purchase from the recovered touch") { (ckpt, out) =>
     val day = 86400L * 1000000L
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[AttributionStream.TouchEvent]
-      def start() = AttributionStream.credits(input.toDS())
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+    val input = MemoryStream[AttributionStream.TouchEvent]
+    def start() = AttributionStream.credits(input.toDS())
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      // run 1: u1 clicks (no conversion yet); u2 clicks long ago
-      val q1 = start()
-      input.addData(
-        AttributionStream.TouchEvent(1L, 10L, day, "click", 0L),
-        AttributionStream.TouchEvent(2L, 20L, day, "view", 0L))
-      q1.processAllAvailable()
-      q1.stop()
+    // run 1: u1 clicks (no conversion yet); u2 clicks long ago
+    val q1 = start()
+    input.addData(
+      AttributionStream.TouchEvent(1L, 10L, day, "click", 0L),
+      AttributionStream.TouchEvent(2L, 20L, day, "view", 0L))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): u1's purchase 2 days later must credit
-      // the RECOVERED click (fresh state would read "none"); u2's
-      // purchase 9 days later is past the recovered touch's lookback —
-      // "none" only if the recovered timestamp is right
-      val q2 = start()
-      input.addData(
-        AttributionStream.TouchEvent(1L, 11L, 3L * day, "purchase", 700L),
-        AttributionStream.TouchEvent(2L, 21L, 10L * day, "purchase", 900L))
-      q2.processAllAvailable()
-      q2.stop()
+    // run 2 (same checkpoint): u1's purchase 2 days later must credit
+    // the RECOVERED click (fresh state would read "none"); u2's
+    // purchase 9 days later is past the recovered touch's lookback —
+    // "none" only if the recovered timestamp is right
+    val q2 = start()
+    input.addData(
+      AttributionStream.TouchEvent(1L, 11L, 3L * day, "purchase", 700L),
+      AttributionStream.TouchEvent(2L, 21L, 10L * day, "purchase", 900L))
+    q2.processAllAvailable()
+    q2.stop()
 
-      val got = spark.read.parquet(out)
-        .select(col("userId"), col("eventId"), col("touchType"), col("valueCents"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-        .toSet
-      assert(got === Set((1L, 11L, "click", 700L), (2L, 21L, "none", 900L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val got = spark.read.parquet(out)
+      .select(col("userId"), col("eventId"), col("touchType"), col("valueCents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+      .toSet
+    assert(got === Set((1L, 11L, "click", 700L), (2L, 21L, "none", 900L)))
   }
 
-  test("decontam twin resumes doc aggregates and re-broadcasts the static probe after restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart_dc").toString
-    val ckpt = s"$base/ckpt"
+  restartTest("decontam twin resumes doc aggregates and re-broadcasts the static probe after restart") { (ckpt, _) =>
     try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val eval = Seq("alpha beta gamma delta epsilon").toDF("text")
       val probe = DecontamStream.probeOf(eval, "text", w = 4).cache()
       val input = MemoryStream[(Long, String)]
@@ -534,116 +253,81 @@ class StreamRestartSpec extends SparkTestBase {
       probe.unpersist()
       ()
     } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
       spark.sql("DROP VIEW IF EXISTS decontam_restart1")
       spark.sql("DROP VIEW IF EXISTS decontam_restart2")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
       ()
     }
   }
 
-  test("heavy-hitter twin's counters accumulate across a restart (exact regime ≡ batch)") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[HeavyHitterStream.KeyedEvent]
-      def start() = HeavyHitterStream.topK(input.toDS(), capacity = 32, k = 5)
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+  restartTest("heavy-hitter twin's counters accumulate across a restart (exact regime ≡ batch)") { (ckpt, out) =>
+    val input = MemoryStream[HeavyHitterStream.KeyedEvent]
+    def start() = HeavyHitterStream.topK(input.toDS(), capacity = 32, k = 5)
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      def evs(ks: Long*): Seq[HeavyHitterStream.KeyedEvent] =
-        ks.map(HeavyHitterStream.KeyedEvent("g", _))
+    def evs(ks: Long*): Seq[HeavyHitterStream.KeyedEvent] =
+      ks.map(HeavyHitterStream.KeyedEvent("g", _))
 
-      // run 1: key 7 leads with 3, key 9 has 2, key 1 has 1
-      val q1 = start()
-      input.addData(evs(7, 7, 9, 7, 9, 1))
-      q1.processAllAvailable()
-      q1.stop()
+    // run 1: key 7 leads with 3, key 9 has 2, key 1 has 1
+    val q1 = start()
+    input.addData(evs(7, 7, 9, 7, 9, 1))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): key 9 gains 3 — it overtakes key 7 ONLY
-      // if run 1's counts survived (fresh state would read 9→3 < 7's lost 3;
-      // reprocessing would double-count run 1's feed)
-      val q2 = start()
-      input.addData(evs(9, 9, 9, 1))
-      q2.processAllAvailable()
-      q2.stop()
+    // run 2 (same checkpoint): key 9 gains 3 — it overtakes key 7 ONLY
+    // if run 1's counts survived (fresh state would read 9→3 < 7's lost 3;
+    // reprocessing would double-count run 1's feed)
+    val q2 = start()
+    input.addData(evs(9, 9, 9, 1))
+    q2.processAllAvailable()
+    q2.stop()
 
-      val rows = spark.read.parquet(out)
-        .select(col("key"), col("cnt"), col("err"), col("rank"), col("nSeen"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getInt(3), r.getLong(4)))
-      val lastN = rows.map(_._5).max
-      assert(lastN === 10L, s"counters must span the restart: nSeen $lastN != 10")
-      val finalTop = rows.filter(_._5 == lastN).sortBy(_._4)
-        .map(t => (t._1, t._2, t._3)).toSeq
-      assert(finalTop === Seq((9L, 5L, 0L), (7L, 3L, 0L), (1L, 2L, 0L)),
-        s"resumed summary wrong: $finalTop")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val rows = spark.read.parquet(out)
+      .select(col("key"), col("cnt"), col("err"), col("rank"), col("nSeen"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getInt(3), r.getLong(4)))
+    val lastN = rows.map(_._5).max
+    assert(lastN === 10L, s"counters must span the restart: nSeen $lastN != 10")
+    val finalTop = rows.filter(_._5 == lastN).sortBy(_._4)
+      .map(t => (t._1, t._2, t._3)).toSeq
+    assert(finalTop === Seq((9L, 5L, 0L), (7L, 3L, 0L), (1L, 2L, 0L)),
+      s"resumed summary wrong: $finalTop")
   }
 
-  test("path twin completes a trigram from the (t-2, t-1) pair recovered across a restart") {
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, rocks)
-    val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
-    val ckpt = s"$base/ckpt"
-    val out = s"$base/out"
-    try {
-      implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val input = MemoryStream[PathStream.PathEvent]
-      def start() = PathStream.trigrams(input.toDS())
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .outputMode(OutputMode.Append()).start()
+  restartTest("path twin completes a trigram from the (t-2, t-1) pair recovered across a restart") { (ckpt, out) =>
+    val input = MemoryStream[PathStream.PathEvent]
+    def start() = PathStream.trigrams(input.toDS())
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append()).start()
 
-      // run 1: u1 sees exactly two events — an in-flight (a, b) pair,
-      // nothing emitted yet; u2 completes one trigram before the restart
-      val q1 = start()
-      input.addData(Seq(
-        PathStream.PathEvent(1L, 10L, "a"), PathStream.PathEvent(1L, 11L, "b"),
-        PathStream.PathEvent(2L, 12L, "x"), PathStream.PathEvent(2L, 13L, "y"),
-        PathStream.PathEvent(2L, 14L, "z")))
-      q1.processAllAvailable()
-      q1.stop()
+    // run 1: u1 sees exactly two events — an in-flight (a, b) pair,
+    // nothing emitted yet; u2 completes one trigram before the restart
+    val q1 = start()
+    input.addData(Seq(
+      PathStream.PathEvent(1L, 10L, "a"), PathStream.PathEvent(1L, 11L, "b"),
+      PathStream.PathEvent(2L, 12L, "x"), PathStream.PathEvent(2L, 13L, "y"),
+      PathStream.PathEvent(2L, 14L, "z")))
+    q1.processAllAvailable()
+    q1.stop()
 
-      // run 2 (same checkpoint): u1's third event arrives — the trigram
-      // (a, b, c) exists ONLY if the two-event prefix survived the
-      // restart (fresh state would re-prime and emit nothing;
-      // reprocessing would double-emit u2's trigram)
-      val q2 = start()
-      input.addData(Seq(PathStream.PathEvent(1L, 15L, "c")))
-      q2.processAllAvailable()
-      q2.stop()
+    // run 2 (same checkpoint): u1's third event arrives — the trigram
+    // (a, b, c) exists ONLY if the two-event prefix survived the
+    // restart (fresh state would re-prime and emit nothing;
+    // reprocessing would double-emit u2's trigram)
+    val q2 = start()
+    input.addData(Seq(PathStream.PathEvent(1L, 15L, "c")))
+    q2.processAllAvailable()
+    q2.stop()
 
-      val rows = spark.read.parquet(out)
-        .select(col("userId"), col("eventId"), col("t1"), col("t2"), col("t3"))
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          r.getString(2), r.getString(3), r.getString(4))).toSeq
-      assert(rows.sortBy(_._2) === Seq(
-        (2L, 14L, "x", "y", "z"),
-        (1L, 15L, "a", "b", "c")),
-        s"recovered journey state wrong: $rows")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      ()
-    }
+    val rows = spark.read.parquet(out)
+      .select(col("userId"), col("eventId"), col("t1"), col("t2"), col("t3"))
+      .collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getString(2), r.getString(3), r.getString(4))).toSeq
+    assert(rows.sortBy(_._2) === Seq(
+      (2L, 14L, "x", "y", "z"),
+      (1L, 15L, "a", "b", "c")),
+      s"recovered journey state wrong: $rows")
   }
 }

@@ -22,7 +22,7 @@ class StreamingSpec extends SparkTestBase {
 
   private val envelopeSchema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
 
-  test("streaming CDC converges to the batch fold (installation, work_task, interests)") {
+  test("streaming CDC converges to the batch fold (installation, work_task, interests)") { withConf(RocksDb) {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
 
@@ -47,11 +47,6 @@ class StreamingSpec extends SparkTestBase {
         .foreach(f => assert(f.setLastModified(t), s"setLastModified failed for $f"))
     pinMtime("batch_a", now - 60000)
     pinMtime("batch_b", now)
-
-    // transformWithState requires the RocksDB state store provider in
-    // streaming (rocksdbjni ships with Spark); scoped to this test
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
     val raw = spark.readStream.schema(envelopeSchema)
       .option("maxFilesPerTrigger", "1")
@@ -111,10 +106,9 @@ class StreamingSpec extends SparkTestBase {
     assert(woiFinal === woiBatch)
 
     instQ.stop(); wtQ.stop(); woiQ.stop()
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
+  } }
 
-  test("backfill-seeded processors stream only the tail and converge to the full batch fold") {
+  test("backfill-seeded processors stream only the tail and converge to the full batch fold") { withConf(RocksDb) {
     import scala.jdk.CollectionConverters._
     import spark.implicits._
 
@@ -136,8 +130,6 @@ class StreamingSpec extends SparkTestBase {
     val inDir = new java.io.File(dir, "in"); inDir.mkdirs()
     spark.createDataFrame(tail.asJava, envelopeSchema).coalesce(1)
       .write.parquet(inDir.getPath + "/tail")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val raw = spark.readStream.schema(envelopeSchema).parquet(inDir.getPath + "/*")
     val decoded = Processors.decode(raw)
     val instQ = Processors.installationCdcSeeded(Processors.installationEvents(decoded), instInit)
@@ -193,6 +185,5 @@ class StreamingSpec extends SparkTestBase {
     assert(woiFinal === woiBatch, "interests diverged after seeded tail catch-up")
 
     instQ.stop(); wtQ.stop(); woiQ.stop()
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
+  } }
 }
