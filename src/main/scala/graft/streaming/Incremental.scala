@@ -64,9 +64,6 @@ import org.apache.spark.sql.types.StructType
   *      (snapshot, batch) functions. Without the snapshots, a crash after
   *      the st_span merge would lose a moved equipment's vacated route
   *      nodes and permanently overcount conduit_slack there.
-  *
-  * Batch-mode callers (the [[CatchUp]] stream) pass the foreachBatch id;
-  * `batchId = -1` (tests, ad-hoc folds) keeps plain non-snapshotted reads.
   */
 object Incremental {
 
@@ -155,23 +152,24 @@ object Incremental {
     }))
 
   /** Fold one decoded micro-batch into the store. See object doc.
-    * `batchId` ≥ 0 enables the two replay-safety layers (skip-if-applied +
-    * pre-merge snapshots); pass the foreachBatch id from a stream.
+    * `batchId` keys both replay-safety layers (skip-if-applied + pre-merge
+    * snapshots): the foreachBatch id from a stream, or any increasing
+    * index when folding chunks directly.
     *
     * Sections for independent table families run on [[stepEc]] threads;
     * sink callbacks are serialized (sink impls need not be thread-safe).
     * Write-write and write-read table sets across concurrent sections are
-    * disjoint by construction (the interest/cable section launches only
-    * after the st_span merge it reads).
+    * disjoint by construction (the interest/cable section launches before
+    * the st_span merge and reads only that table's pinned snapshot).
     *
     * Returns whether the batch carried any events (the fused step-start
     * collect knows for free) — so [[CatchUp]] needs NO separate
     * `batch.isEmpty` job on the 2-second path; an already-applied
     * redelivery reports true (it did carry the events, last time). */
   def step(store: StateStore, batchDecoded: DataFrame, sink: Sink = noSink,
-      batchId: Long = -1L): Boolean = {
-    if (batchId >= 0 && store.lastAppliedBatch.exists(_ >= batchId)) return true
-    if (batchId >= 0) store.clearSnapshots(batchId) // drop other batches' leftovers
+      batchId: Long): Boolean = {
+    if (store.lastAppliedBatch.exists(_ >= batchId)) return true
+    store.clearSnapshots(batchId) // drop other batches' leftovers
     val spark = batchDecoded.sparkSession
     val sc = spark.sparkContext
     import scala.concurrent.{Await, Future}
@@ -266,44 +264,30 @@ object Incremental {
       // (st_node_container → terminal chain, st_interest → pseudo-walks).
       // Returns the pre-merge stored view over (batch ∪ extra) keys and
       // schedules the family merge plus its output off the caller's
-      // critical path:
-      //   - batch mode: the widened snapshot is PINNED first (driver-side
-      //     bucket copy, milliseconds) and the merge — over the batch keys
-      //     ONLY; merging the extras would rewrite their stored rows
-      //     byte-unchanged, widening the write bucket span for nothing —
-      //     runs with its output on a concurrent sub-section. The
-      //     sub-section's mergeFamily re-reads the SAME pinned snapshot
-      //     dirs (keys0 ⊆ keysAll and the manifest marks every bucket
-      //     copied, so its readKeyedSnap is a listing, not a copy);
-      //   - ad-hoc mode (batchId < 0): no pinned snapshot dir exists, so a
-      //     live pre-merge read would race a concurrent merge's bucket
-      //     swap — the merge runs INLINE with extraReadKeys widening its
-      //     checkpointed snapshot, which doubles as the returned view; the
-      //     output alone goes to a sub-section.
-      // The batchId < 0 fork lives here and ONLY here; keys0 is threaded
-      // into the merge so the fused-collect OVERFLOW fallback does not pay
-      // the distinct+collect job twice.
+      // critical path: the widened snapshot is PINNED first (driver-side
+      // bucket copy, milliseconds) and the merge — over the batch keys
+      // ONLY; merging the extras would rewrite their stored rows
+      // byte-unchanged, widening the write bucket span for nothing — runs
+      // with its output on a concurrent sub-section. The sub-section's
+      // mergeFamily re-reads the SAME pinned snapshot dirs (keys0 ⊆ keysAll
+      // and the manifest marks every bucket copied, so its readKeyedSnap is
+      // a listing, not a copy). keys0 is threaded into the merge so the
+      // fused-collect OVERFLOW fallback does not pay the distinct+collect
+      // job twice.
       def preViewMerge(table: String, idCol: String, partial: DataFrame,
           pairs: Seq[(String, String)], extraKeys: KeySet,
-          output: (KeySet, DataFrame) => Unit): DataFrame =
-        if (batchId >= 0) {
-          val keys0 = fusedKeys.getOrElse(table,
-            KeySet.fromDf(partial.select(col(idCol)), cap))
-          val keysAll = KeySet.union(keys0, extraKeys, cap, spark)
-          val snap = store.readKeyedSnap(batchId, table, partial.schema, idCol, keysAll)
-          section {
-            val (keys, _, merged) = mergeFamily(store, table, idCol, partial, pairs, Nil,
-              batchId = batchId, batchKeys = Some(keys0))
-            output(keys, merged)
-          }
-          snap
-        } else {
-          val (keys, stored, merged) = mergeFamily(store, table, idCol, partial, pairs, Nil,
-            extraReadKeys = Some(extraKeys), batchId = batchId,
-            batchKeys = fusedKeys.get(table))
-          section { output(keys, merged) }
-          stored
+          output: (KeySet, DataFrame) => Unit): DataFrame = {
+        val keys0 = fusedKeys.getOrElse(table,
+          KeySet.fromDf(partial.select(col(idCol)), cap))
+        val keysAll = KeySet.union(keys0, extraKeys, cap, spark)
+        val snap = store.readKeyedSnap(batchId, table, partial.schema, idCol, keysAll)
+        section {
+          val (keys, _, merged) = mergeFamily(store, table, idCol, partial, pairs, Nil,
+            batchId = batchId, batchKeys = Some(keys0))
+          output(keys, merged)
         }
+        snap
+      }
 
       // ---------- dimension tables (tiny; merged first — every family
       // finalizer joins them) ----------
@@ -399,14 +383,11 @@ object Incremental {
       }
 
       // ---------- interests + cable walks (concurrent; launched BEFORE the
-      // st_span merge when a real batch snapshot is available (r8) —
-      // affix/detach interest ids resolve the placement-frozen `pl` struct,
-      // which the PRE-merge span snapshot ∪ the batch partial determine
-      // exactly (pl merges as lastNonNull on placed_seq, so
-      // merge(snapshot, batch) ≡ the post-merge value); the as-of resolve
-      // reads the PRE-merge interest snapshot. Without a batch id
-      // (diagnostic/spec drivers) there is no pinned snapshot, so the
-      // section keeps the post-merge read and launches after the merge.
+      // st_span merge (r8) — affix/detach interest ids resolve the
+      // placement-frozen `pl` struct, which the PRE-merge span snapshot ∪
+      // the batch partial determine exactly (pl merges as lastNonNull on
+      // placed_seq, so merge(snapshot, batch) ≡ the post-merge value); the
+      // as-of resolve reads the PRE-merge interest snapshot.
       // Gated on the event types that can actually change an interest or a
       // cable walk: interest events, cable/conduit placements, affixes and
       // detaches. A move-only span batch (the steady-state mix) skips the
@@ -416,28 +397,24 @@ object Incremental {
         typesPresent("SpanEquipmentDetachedFromParent")
       val interestRelevant = has(interestTypes) || hasAffixDetach ||
         typesPresent("SpanEquipmentPlacedInRouteNetwork")
-      def launchInterestSection(spanPreMerge: Option[DataFrame]): Unit = section {
-        val interestOf =
-          if (hasAffixDetach) spanPreMerge match {
-            case Some(snap) =>
-              // ADVICE r8: restrict the batch side to ad_children BEFORE the
-              // fold so both branches of interestOf produce the same frame —
-              // the snapshot is already ad_children-keyed, and an
-              // unrestricted bSpan would add a row for EVERY batch-touched
-              // span id (harmless for today's inner-joining consumer, but a
-              // latent trap for any new one).
-              val adChildren = fusedOr("ad_children")
-              Folds.mergePartials(
-                Seq(snap, restrictToKeys(bSpan, adChildren, "id", bSpan.columns.toSeq)),
-                "id", Seq("pl" -> "placed_seq"))
-                .select(col("id").as("cable_id"),
-                  col("pl").getField("walk_of_interest_id").as("interest_id"))
-            case None =>
-              val adChildren = fusedOr("ad_children")
-              store.readKeyed("st_span", bSpan.schema, "id", adChildren)
-                .select(col("id").as("cable_id"),
-                  col("pl").getField("walk_of_interest_id").as("interest_id"))
-          } else emptyFrame(spark, StructType.fromDDL("cable_id STRING, interest_id STRING"))
+      // `spanSnap`: the pinned pre-merge st_span rows of the affixed or
+      // detached children — present exactly when the batch has such events
+      def launchInterestSection(spanSnap: Option[DataFrame]): Unit = section {
+        val interestOf = spanSnap match {
+          case Some(snap) =>
+            // ADVICE r8: restrict the batch side to ad_children BEFORE the
+            // fold — the snapshot is already ad_children-keyed, and an
+            // unrestricted bSpan would add a row for EVERY batch-touched
+            // span id (harmless for today's inner-joining consumer, but a
+            // latent trap for any new one).
+            val adChildren = fusedOr("ad_children")
+            Folds.mergePartials(
+              Seq(snap, restrictToKeys(bSpan, adChildren, "id", bSpan.columns.toSeq)),
+              "id", Seq("pl" -> "placed_seq"))
+              .select(col("id").as("cable_id"),
+                col("pl").getField("walk_of_interest_id").as("interest_id"))
+          case None => emptyFrame(spark, StructType.fromDDL("cable_id STRING, interest_id STRING"))
+        }
         val applies = Derivations
           .cablePlacementApplies(b, eqSpecs.select(col("spec_id"), col("spec_is_cable")))
           .unionByName(Derivations.cableAffixDetachApplies(b, interestOf))
@@ -469,10 +446,10 @@ object Incremental {
 
         // applyInterests widen only the pre-merge view (the as-of
         // pseudo-walk interests), never the merge — preViewMerge's shared
-        // contract. r10: in batch mode the interest merge + rel_interest
-        // output now run on a concurrent sub-section (the nc pattern),
-        // taking the merge off the walk-resolve critical path — the
-        // pseudo-walk union below reads the pinned snapshot, not the merge.
+        // contract. r10: the interest merge + rel_interest output run on a
+        // concurrent sub-section (the nc pattern), taking the merge off the
+        // walk-resolve critical path — the pseudo-walk union below reads
+        // the pinned snapshot, not the merge.
         val intPartial = Derivations.interestPartialRows(b)
         val intStored = preViewMerge("st_interest", "interest_id", intPartial,
           Derivations.interestPartialPairs, applyInterests,
@@ -512,28 +489,24 @@ object Incremental {
       // id is placement-frozen, so the batch's placements ARE the full
       // delta ([[Derivations.placedRootRows]]); its merge overlaps the
       // st_span merge on a section thread instead of chaining after it.
-      val needAffixChain = hasAffixDetach ||
-        typesPresent("SpanEquipmentPlacedInRouteNetwork")
+      val hasPlacement = typesPresent("SpanEquipmentPlacedInRouteNetwork")
+      val needAffixChain = hasAffixDetach || hasPlacement
       val affixRootIds = if (needAffixChain) fusedOr("root_ids") else KeySet.empty
       // pin the pre-merge root rows the affix chain resolves against
       // (driver-side bucket copy, milliseconds) BEFORE the root merge
       // launches: snapshot ∪ the batch-pure delta ≡ the post-merge read
       // (a root id is placement-frozen, so stored and delta rows for the
-      // same root are byte-identical — replay included — and distinct()
-      // restores row multiplicity), so the chain drops the root-merge
-      // await from its critical path (r8). batchId < 0 has no pinned
-      // snapshot: those callers keep the await + post-merge read.
+      // same root are byte-identical — replay included), so the chain
+      // never awaits the root merge (r8). A placement-free batch launches
+      // no root merge, so its chain reads the table live.
       val rootSnapOpt: Option[DataFrame] =
-        if (needAffixChain && batchId >= 0 &&
-            typesPresent("SpanEquipmentPlacedInRouteNetwork"))
-          Some(store.readKeyedSnap(batchId, "st_root_segment", rootSchema,
-            "root_segment_id", affixRootIds))
+        if (hasPlacement) Some(store.readKeyedSnap(batchId, "st_root_segment", rootSchema,
+          "root_segment_id", affixRootIds))
         else None
-      val fRootMerge: Option[Future[Any]] =
-        if (typesPresent("SpanEquipmentPlacedInRouteNetwork"))
-          Some(tracked(store.mergeReplace("st_root_segment", "root_segment_id",
-            fusedOr("new_root_ids"), Derivations.placedRootRows(b))))
-        else None
+      if (hasPlacement) section {
+        store.mergeReplace("st_root_segment", "root_segment_id",
+          fusedOr("new_root_ids"), Derivations.placedRootRows(b))
+      }
       // ---------- affix timeline → child-affix + has-child state ----------
       // Runs CONCURRENTLY with the st_span merge below (r8): the chain
       // reads the pinned st_root_segment snapshot (∪ the batch-pure
@@ -541,12 +514,7 @@ object Incremental {
       // batch-pure frames — none of which the st_span merge or the
       // concurrent st_root_segment merge touches. Only the eligible-end
       // recount needs BOTH seKeys and hcKeys, so that is where the future
-      // is joined. The batchId < 0 fallback awaits fRootMerge before a
-      // post-merge read; await-inside-a-pool-task is safe by submission
-      // order: stepEc is FIFO, fRootMerge is submitted before this
-      // future, and a FIFO pool starts tasks in submission order — the
-      // awaited task is already running (or done) when the awaiter
-      // starts.
+      // is joined.
       val fHc: scala.concurrent.Future[(KeySet, Option[DataFrame])] =
       if (needAffixChain) tracked {
         val edges = Derivations.affixEdges(b) // (child_id, seq, root_segment_id)
@@ -564,10 +532,9 @@ object Incremental {
           else Some(store
             .readKeyedSnap(batchId, "st_child_affixes", childAffixSchema, "child_id", touchedChildren)
             .withColumn("stored", lit(true)))
-        // pinned pre-merge snapshot ∪ batch-pure delta when available (the
-        // hot path — no await); otherwise await the root merge and read
-        // post-merge (batchId < 0, or placement-free batches where no
-        // merge launched and the plain read is already safe)
+        // pinned pre-merge snapshot ∪ batch-pure delta on placement
+        // batches; a placement-free batch has no root delta and no
+        // concurrent root merge, so the live read is the pre-batch view
         val rootMap = rootSnapOpt match {
           case Some(snap) =>
             // ADVICE r8: fold the union with max_by per root_segment_id
@@ -580,16 +547,13 @@ object Incremental {
             // folds per SPAN id, so a malformed log where two same-batch
             // placements share a root_segment_id yields two batch rows —
             // break the tie on (src, id) so the fold is deterministic
-            // instead of picking an arbitrary parent (the readKeyed
-            // fallback path would retain both rows; on well-formed logs,
-            // where roots are span-unique, the paths stay identical).
+            // instead of picking an arbitrary parent.
             snap.withColumn("_src", lit(0))
               .unionByName(Derivations.placedRootRows(b).withColumn("_src", lit(1)))
               .groupBy(col("root_segment_id"))
               .agg(max_by(col("id"), struct(col("_src"), col("id"))).as("id"))
               .select(col("root_segment_id"), col("id"))
           case None =>
-            fRootMerge.foreach(Await.result(_, Duration.Inf))
             store.readKeyed("st_root_segment", rootSchema, "root_segment_id", affixRootIds)
         }
         val batchAffixes = edges.join(rootMap, Seq("root_segment_id"))
@@ -653,32 +617,22 @@ object Incremental {
       // snapshot copy, milliseconds) and launch it BEFORE the st_span merge
       // — the section's longest chain (lastApply collect → interest
       // merge → walk resolves) then overlaps the merge instead of queueing
-      // behind it. Only with a real batchId: batchId < 0 has no pinned
-      // snapshot dir, so the pre-merge read would race the merge's bucket
-      // swap — those callers keep the post-merge launch below.
-      val spanPreForInterest: Option[DataFrame] =
-        if (interestRelevant && hasAffixDetach && batchId >= 0)
-          Some(store.readKeyedSnap(batchId, "st_span", bSpan.schema, "id",
-            fusedOr("ad_children")))
-        else None
-      val interestLaunchedEarly = interestRelevant &&
-        (spanPreForInterest.nonEmpty || !hasAffixDetach)
-      if (interestLaunchedEarly) launchInterestSection(spanPreForInterest)
-      // ASYNC st_span merge (r8, batch mode): mergeFamily materializes the
-      // fold to a checkpoint and the staged write + swap runs on a section
-      // thread — the biggest single job of the dense step comes off the
-      // critical path. Every in-step consumer reads the checkpoint or a
-      // snapshot; the ONE live post-merge read (spanElig below) awaits the
-      // write first. batchId < 0 keeps the synchronous merge.
+      // behind it
+      if (interestRelevant) launchInterestSection(
+        if (hasAffixDetach) Some(store.readKeyedSnap(batchId, "st_span", bSpan.schema,
+          "id", fusedOr("ad_children")))
+        else None)
+      // ASYNC st_span merge (r8): mergeFamily materializes the fold to a
+      // checkpoint and the staged write + swap runs on a section thread —
+      // the biggest single job of the dense step comes off the critical
+      // path. Every in-step consumer reads the checkpoint or a snapshot;
+      // the ONE live post-merge read (spanElig below) awaits the write
+      // first.
       var fSpanWrite: Option[Future[Any]] = None
       val (seKeys, seStored, seMerged) = mergeFamily(store, "st_span", "id",
         bSpan, Derivations.spanPartialPairs, Nil, batchId = batchId,
         batchKeys = fusedKeys.get("st_span"),
         asyncWrite = Some(body => fSpanWrite = Some(tracked(body()))))
-      // late launch only when the early path was unavailable (batchId < 0
-      // with affix/detach events): reads POST-merge st_span (synchronous
-      // merge in that mode — nothing to await)
-      if (interestRelevant && !interestLaunchedEarly) launchInterestSection(None)
 
       // ---------- span_equipment output (concurrent with affix chain) ----
       section {
@@ -815,8 +769,7 @@ object Incremental {
         section {
           fHcForMat.foreach(Await.result(_, Duration.Inf))
           store.mergeReplace("st_has_child", "parent_id", hcKeys,
-            restrictToKeys(hcFor, hcKeys, "parent_id", hcFor.columns.toSeq),
-            coversKeys = true) }
+            restrictToKeys(hcFor, hcKeys, "parent_id", hcFor.columns.toSeq)) }
       }
       // the merge's replacement is the checkpointed frame restricted to
       // the touched ids (= endRows exactly: kept excludes every eligKeys
@@ -853,10 +806,8 @@ object Incremental {
       // ... then the commit point: record completion FIRST (a crash between
       // the two leaves a skippable batch with a stale snapshot dir, cleaned
       // by the next step), then drop this batch's snapshots
-      if (batchId >= 0) {
-        store.setLastAppliedBatch(batchId)
-        store.clearSnapshots(batchId, including = true)
-      }
+      store.setLastAppliedBatch(batchId)
+      store.clearSnapshots(batchId, including = true)
       // always true here: the events-free case returned false at the
       // fused-collect guard above — this literal states that invariant
       true
@@ -1001,11 +952,8 @@ object Incremental {
     filtered.select(cols.map(col).toSeq: _*)
   }
 
-  /** Merge a batch partial onto stored state for its touched keys (plus
-    * `extraReadKeys`, which are read+rewritten unchanged — used when a
-    * downstream as-of resolve needs the pre-batch snapshot of keys the
-    * batch itself does not touch). Returns (touchedKeys, storedSnapshot,
-    * merged).
+  /** Merge a batch partial onto stored state for its touched keys.
+    * Returns (touchedKeys, storedSnapshot, merged).
     *
     * Job shape (r6): the touched keys are ONE bounded collect
     * ([[KeySet.fromDf]]); a known-empty set short-circuits the whole merge.
@@ -1024,36 +972,29 @@ object Incremental {
     * snapshots. */
   private def mergeFamily(store: StateStore, table: String, idCol: String,
       batchPartial: DataFrame, pairs: Seq[(String, String)], seqs: Seq[String],
-      extraReadKeys: Option[KeySet] = None,
-      batchId: Long = -1L, snapshot: Boolean = true,
+      batchId: Long, snapshot: Boolean = true,
       batchKeys: Option[KeySet] = None,
       asyncWrite: Option[(() => Unit) => Unit] = None): (KeySet, DataFrame, DataFrame) = {
     val spark = batchPartial.sparkSession
     // batchKeys: the step's fused one-job collect already knows this
     // family's touched ids (identical set — the partial groups by exactly
     // the projected id expression); absent on the overflow fallback
-    val keys0 = batchKeys.getOrElse(
+    val keys = batchKeys.getOrElse(
       KeySet.fromDf(batchPartial.select(col(idCol)), store.maxInsetKeys))
-    val keys = extraReadKeys
-      .map(KeySet.union(keys0, _, store.maxInsetKeys, spark)).getOrElse(keys0)
     if (keys.knownEmpty) {
       val empty = emptyFrame(spark, batchPartial.schema)
       return (keys, empty, empty)
     }
     // snapshot callers CONSUME stored after the merge (pseudo-events,
-    // vacated positions) — it must be materialized before the overwrite:
-    // parquet-backed in batch mode, checkpointed in ad-hoc (-1) mode.
+    // vacated positions) — it reads the pinned pre-merge snapshot dirs.
     // snapshot=false callers discard it, so it stays a lazy plan folded
     // into the merge's staged write.
     val stored =
-      if (batchId >= 0 && snapshot)
-        store.readKeyedSnap(batchId, table, batchPartial.schema, idCol, keys)
-      else if (snapshot)
-        store.readKeyed(table, batchPartial.schema, idCol, keys).localCheckpoint(true)
+      if (snapshot) store.readKeyedSnap(batchId, table, batchPartial.schema, idCol, keys)
       else store.readKeyed(table, batchPartial.schema, idCol, keys)
     val mergedPlan = Folds.mergePartials(Seq(stored, batchPartial), idCol, pairs, seqs)
-    // ASYNC-WRITE mode (r8, batch mode only): materialize the fold to a
-    // local checkpoint (fold cost only — no parquet encode) and hand the
+    // ASYNC-WRITE mode (r8, snapshot families only): materialize the fold
+    // to a local checkpoint (fold cost only — no parquet encode) and hand the
     // staged write + bucket swap to the caller's submit function, which
     // runs it on a section thread. The returned merged frame is the
     // checkpoint, so every downstream consumer proceeds without the write
@@ -1067,18 +1008,15 @@ object Incremental {
     // write overlap saved at micro-batch sizes (sentinel-normalized dense
     // min regressed ~10%); st_span stays the only asyncWrite family.
     asyncWrite match {
-      case Some(submit) if batchId >= 0 && snapshot =>
+      case Some(submit) if snapshot =>
         val merged = mergedPlan.localCheckpoint(true)
-        submit(() => store.mergeReplace(table, idCol, keys, merged, coversKeys = true))
+        submit(() => store.mergeReplace(table, idCol, keys, merged))
         (keys, stored, merged)
       case _ =>
-        // coversKeys: merged is a groupBy over stored ∪ batch, so every
-        // touched key with any row appears — the merge skips the
-        // emptied-bucket sweep. The merge's returned file-backed frame
-        // doubles as the merged frame (ONE materialization job per family
-        // instead of two).
+        // the merge's returned file-backed frame doubles as the merged
+        // frame (ONE materialization job per family instead of two)
         val merged = store
-          .mergeReplaceReturning(table, idCol, keys, mergedPlan, coversKeys = true) match {
+          .mergeReplaceReturning(table, idCol, keys, mergedPlan) match {
             case Some(written) => restrictToKeys(written, keys, idCol, mergedPlan.columns.toSeq)
             // wholesale-create path: the written table IS the merged state —
             // read it back (lazy parquet, no extra job)

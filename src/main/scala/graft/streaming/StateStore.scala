@@ -229,12 +229,6 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   // Constructor-injectable so StepDistKeysSpec can force every engine
   // path through the distributed fallback on a small log.
 
-  /** Rows of `table` whose `keyCol` is in `keys` (a one-column frame named
-    * `k`). One bounded job collects the key set; the read itself is
-    * [[readKeyed(table:String,schema*]] over the resulting [[KeySet]]. */
-  def readKeyed(table: String, schema: StructType, keyCol: String, keys: DataFrame): DataFrame =
-    readKeyed(table, schema, keyCol, KeySet.fromDf(keys, maxInsetKeys))
-
   /** Scan of exactly the touched bucket DIRECTORIES (never the table
     * root): a root read must discover all partitions first, and past the
     * parallel-discovery threshold (32 paths) that listing is a distributed
@@ -276,42 +270,31 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   }
 
   /** Delete-then-insert merge: remove every row whose `keyCol` is in
-    * `touchedKeys` (one column `k`), insert `replacement`, rewriting only
-    * the buckets involved. `bucketSrcCol` is the column bucketing the
-    * table's layout (defaults to the merge key); when they differ (e.g.
-    * eligible-ends bucketed by route node but deleted by equipment id),
-    * `extraBucketValues` must carry the bucket-source values (one column
-    * `b`) of BOTH the rows being deleted (their OLD positions) and every
-    * `replacement` row, so all affected buckets are rewritten.
+    * `keys`, insert `replacement`, rewriting only the buckets involved.
+    * `bucketSrcCol` is the column bucketing the table's layout (defaults
+    * to the merge key); when they differ (e.g. eligible-ends bucketed by
+    * route node but deleted by equipment id), `extraBucketVals` must carry
+    * the bucket-source values of BOTH the rows being deleted (their OLD
+    * positions) and every `replacement` row, so all affected buckets are
+    * rewritten.
     *
     * Contract (r6 — lets the bucket span derive from the keys instead of a
     * replacement-frame scan): replacement rows' bucket-source values must
-    * be covered by `touchedKeys` (default layout) or `extraBucketValues`
-    * (split layout). Every engine call site satisfies this by
-    * construction — a merge's replacement is a function of (stored state,
-    * batch) restricted to the touched keys. */
-  def mergeReplace(table: String, keyCol: String,
-      touchedKeys: DataFrame, replacement: DataFrame): Unit =
-    mergeReplace(table, keyCol, KeySet.fromDf(touchedKeys, maxInsetKeys),
-      replacement, coversKeys = false)
-
-  /** [[mergeReplace(table:String,keyCol:String,touchedKeys:org\.apache\.spark\.sql\.DataFrame*]]
-    * over a [[KeySet]]. With a driver-resident key set the merge costs ONE
-    * job (the staged bucket write — see [[mergeReplaceReturning]]): the
-    * bucket span and the delete IN-set come from the keys with no collect,
-    * and the emptied-bucket sweep is a free by-product of the staging-dir
-    * listing. `coversKeys` (the caller asserts `replacement` contains
-    * every touched key that has any stored or batch row — true for all
-    * field-wise partial merges, where the merged frame is a groupBy over
-    * stored ∪ batch) is retained as call-site documentation; since r7 both
-    * paths cost the same. */
+    * be covered by `keys` (default layout) or `extraBucketVals` (split
+    * layout). Every engine call site satisfies this by construction — a
+    * merge's replacement is a function of (stored state, batch) restricted
+    * to the touched keys.
+    *
+    * With a driver-resident key set the merge costs ONE job (the staged
+    * bucket write — see [[mergeReplaceReturning]]): the bucket span and the
+    * delete IN-set come from the keys with no collect, and the
+    * emptied-bucket sweep is a free by-product of the staging-dir
+    * listing. */
   def mergeReplace(table: String, keyCol: String, keys: KeySet,
-      replacement: DataFrame, coversKeys: Boolean = false,
-      bucketSrcCol: Option[String] = None,
+      replacement: DataFrame, bucketSrcCol: Option[String] = None,
       extraBucketVals: Option[KeySet] = None): Unit = {
     // the returned frame is a lazy read since r7 (nothing to release)
-    mergeReplaceReturning(table, keyCol, keys, replacement, coversKeys,
-      bucketSrcCol, extraBucketVals)
+    mergeReplaceReturning(table, keyCol, keys, replacement, bucketSrcCol, extraBucketVals)
     ()
   }
 
@@ -326,8 +309,7 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     * files). `None` when the merge was a no-op (empty bucket span) or the
     * table was created wholesale. */
   def mergeReplaceReturning(table: String, keyCol: String, keys: KeySet,
-      replacement: DataFrame, coversKeys: Boolean = false,
-      bucketSrcCol: Option[String] = None,
+      replacement: DataFrame, bucketSrcCol: Option[String] = None,
       extraBucketVals: Option[KeySet] = None): Option[DataFrame] = {
     // split layout without the bucket-source values would compute an empty
     // span and silently no-op the merge (ADVICE r6) — the caller must pass
@@ -607,11 +589,9 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   // A step's later sections consume PRE-batch reads of tables it merged
   // earlier in the same step (e.g. the vacated node positions of a moved
   // equipment). A mid-step crash + at-least-once redelivery would re-read
-  // those tables post-merge and lose the pre-batch view — so in batch mode
-  // every pre-merge read is persisted under _snap/batch=<id>/ on first
-  // execution and REPLAYED FROM THE SNAPSHOT on redelivery. The snapshot
-  // write doubles as the lineage cut the plain path gets via
-  // localCheckpoint, so batch mode adds no extra materialization.
+  // those tables post-merge and lose the pre-batch view — so every
+  // pre-merge read is persisted under _snap/batch=<id>/ on first execution
+  // and REPLAYED FROM THE SNAPSHOT on redelivery.
 
   private def snapPath(batchId: Long, name: String) = s"$root/_snap/batch=$batchId/$name"
 
@@ -626,10 +606,9 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
       .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** [[readKeyed]] through the batch snapshot (see above). `batchId < 0`
-    * bypasses snapshotting (plain read, caller manages lineage). A
-    * known-empty key set skips the snapshot write outright — the replay
-    * re-derives the same empty read from the batch alone.
+  /** [[readKeyed]] through the batch snapshot (see above). A known-empty
+    * key set skips the snapshot write outright — the replay re-derives the
+    * same empty read from the batch alone.
     *
     * r7 (VERDICT r6 #2a): the snapshot is a DRIVER-SIDE FILE COPY of the
     * touched bucket directories, not a Spark write job — the pre-merge
@@ -641,7 +620,6 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   def readKeyedSnap(batchId: Long, table: String, schema: StructType,
       keyCol: String, keys: KeySet): DataFrame = {
     if (keys.knownEmpty) return emptyDf(schema)
-    if (batchId < 0) return readKeyed(table, schema, keyCol, keys)
     val p = new Path(snapPath(batchId, table))
     val done = new Path(p, "_SUCCESS")
     // `under`: the bucket layout the ids are computed against. Bucket ids
@@ -796,14 +774,9 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     restricted.drop("bucket").select(schema.fieldNames.map(col).toSeq: _*)
   }
 
-  def readKeyedSnap(batchId: Long, table: String, schema: StructType,
-      keyCol: String, keys: DataFrame): DataFrame =
-    readKeyedSnap(batchId, table, schema, keyCol, KeySet.fromDf(keys, maxInsetKeys))
-
   /** [[readSmall]] through the batch snapshot. */
   def readSmallSnap(batchId: Long, table: String, schema: StructType): DataFrame =
-    if (batchId < 0) readSmall(table, schema)
-    else snapshotted(batchId, table, schema, readSmall(table, schema))
+    snapshotted(batchId, table, schema, readSmall(table, schema))
 
   /** Drop snapshot dirs of other batches (only one batch is ever in
     * flight) and, when `including`, this batch's own. */

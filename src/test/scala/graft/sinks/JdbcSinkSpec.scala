@@ -94,7 +94,9 @@ class JdbcSinkSpec extends SparkTestBase {
 
     val stateDir = Files.createTempDirectory("graft-jdbc").toFile.getPath
     val store = new StateStore(spark, stateDir, nBuckets = 16)
-    chunks.foreach(c => Incremental.step(store, EventLog.decode(toDf(c)), sink))
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      Incremental.step(store, EventLog.decode(toDf(c)), sink, batchId = i.toLong)
+    }
 
     val oracle = Derivations.deriveAll(EventLog.decode(toDf(rows)).cache())
     oracle.foreach { case (table, expected) =>
@@ -106,11 +108,15 @@ class JdbcSinkSpec extends SparkTestBase {
     assert(FakeDb.executeBatchCount.get() > 0)
 
     // at-least-once redelivery: re-apply the LAST chunk (state merge and
-    // sink DML both re-run) — contents must be unchanged. Note: the
+    // sink DML both re-run) — contents must be unchanged. Clearing the
+    // applied-batch mark is the checkpoint-reset path CatchUp.startQuery
+    // takes; without it the step would skip the redelivered id. Note: the
     // incremental sink deletes touched keys BEFORE inserting, so its
     // idempotence never depends on ON CONFLICT (the bulk-load retry test
     // above covers that branch); pin that design fact here.
-    Incremental.step(store, EventLog.decode(toDf(chunks.last)), sink)
+    store.clearLastAppliedBatch()
+    Incremental.step(store, EventLog.decode(toDf(chunks.last)), sink,
+      batchId = chunks.length - 1L)
     oracle.foreach { case (table, expected) =>
       assert(FakeDb.contents(s"graft.$table") === oracleContents(expected),
         s"table $table not idempotent under batch replay")

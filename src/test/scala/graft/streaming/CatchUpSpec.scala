@@ -12,9 +12,10 @@ import scala.util.Random
   * event log in micro-batch steps through [[Incremental.step]] — which
   * sees ONLY each batch plus keyed state reads, never the cumulative log —
   * must produce exactly the 8 tables of the one-shot batch backfill
-  * (SURVEY.md §5.5). The O(delta) property is structural here (the full
-  * log is never handed to the engine); IncrementalScanSpec additionally
-  * asserts the I/O volume.
+  * (SURVEY.md §5.5). Each chunk is applied with its index as the batch id,
+  * the replay-safe path the stream runs. The O(delta) property is
+  * structural here (the full log is never handed to the engine);
+  * IncrementalScanSpec additionally asserts the I/O volume.
   */
 class CatchUpSpec extends ProjectorTestBase {
 
@@ -30,15 +31,25 @@ class CatchUpSpec extends ProjectorTestBase {
       df.columns.sorted.map(c => s"$c=${r.getAs[Any](c)}").mkString("|")
     }.toSet
 
-  private def runChunks(rows: Seq[Row], nChunks: Int, label: String): Unit = {
+  private def rowsOf(seed: Int, slackPathologies: Boolean = false): Seq[Row] =
+    LogGen.scenario(new Random(seed), slackPathologies = slackPathologies)
+      .zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
+
+  /** `nChunks` equal-sized chunks, as cut points. */
+  private def evenCuts(n: Int, nChunks: Int): Seq[Int] =
+    (1 until nChunks).map(i => i * n / nChunks)
+
+  /** Apply `rows` in batches split at `cuts` (row offsets; duplicates and
+    * out-of-range offsets are dropped), then compare with the backfill. */
+  private def runChunks(rows: Seq[Row], cuts: Seq[Int], label: String): Unit = {
     val n = rows.length
-    val bounds = (0 to nChunks).map(i => i * n / nChunks)
+    val bounds = 0 +: cuts.filter(c => c > 0 && c < n).distinct.sorted :+ n
     val chunks = bounds.sliding(2).map { case Seq(a, z) => rows.slice(a, z) }.toSeq
 
     val stateDir = Files.createTempDirectory(s"graft-catchup-$label").toFile.getPath
     val store = new StateStore(spark, stateDir, nBuckets = 16)
-    chunks.filter(_.nonEmpty).foreach { chunk =>
-      Incremental.step(store, EventLog.decode(toDf(chunk)))
+    chunks.zipWithIndex.foreach { case (chunk, i) =>
+      Incremental.step(store, EventLog.decode(toDf(chunk)), batchId = i.toLong)
     }
 
     val oracle = Derivations.deriveAll(EventLog.decode(toDf(rows)).cache())
@@ -49,15 +60,24 @@ class CatchUpSpec extends ProjectorTestBase {
   }
 
   test("3-step incremental catch-up equals one-shot backfill on all 8 tables") {
-    val events = LogGen.scenario(new Random(21))
-    val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
-    runChunks(rows, 3, "s21x3")
+    val rows = rowsOf(21)
+    runChunks(rows, evenCuts(rows.length, 3), "s21x3")
   }
 
   test("7-step incremental catch-up equals one-shot backfill (different seed)") {
-    val events = LogGen.scenario(new Random(87))
-    val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
-    runChunks(rows, 7, "s87x7")
+    val rows = rowsOf(87)
+    runChunks(rows, evenCuts(rows.length, 7), "s87x7")
+  }
+
+  test("catch-up equals backfill at random batch boundaries, including 1-event batches") {
+    // uneven batches from five seeded-random cuts, plus cuts at 1 and 2 so
+    // the log opens with two 1-event batches
+    Seq(5, 44).foreach { seed =>
+      val rows = rowsOf(seed)
+      val rnd = new Random(seed + 1000)
+      val cuts = Seq(1, 2) ++ Seq.fill(5)(3 + rnd.nextInt(rows.length - 3))
+      runChunks(rows, cuts, s"s${seed}cuts")
+    }
   }
 
   test("incremental slack is the invariant recount even on pathological logs (compat is batch-only)") {
@@ -65,8 +85,7 @@ class CatchUpSpec extends ProjectorTestBase {
     // reference's ±1 arithmetic double-counts (Derivations fidelity notes):
     // the incremental path must match the DEFAULT (invariant) derivation,
     // not conduitSlackCompat — compat mode is a batch-only migration audit
-    val events = LogGen.scenario(new Random(33), slackPathologies = true)
-    val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
-    runChunks(rows, 4, "patho")
+    val rows = rowsOf(33, slackPathologies = true)
+    runChunks(rows, evenCuts(rows.length, 4), "patho")
   }
 }

@@ -48,7 +48,7 @@ class IncrementalScanSpec extends ProjectorTestBase {
       val e = Sim.InstCreated(s"inst-$i", s"I-$i", Some(s"ua-$i"), "planned", Some(remark()))
       Row(i.toLong, e.typ, e.payload)
     }
-    Incremental.step(store, EventLog.decode(toDf(seed)))
+    Incremental.step(store, EventLog.decode(toDf(seed)), batchId = 0L)
     val stateBytes = dirBytes(dir)
     assert(stateBytes > 200000, s"seed state unexpectedly small: $stateBytes B")
 
@@ -79,7 +79,7 @@ class IncrementalScanSpec extends ProjectorTestBase {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Incremental.step(store, EventLog.decode(toDf(batch)))
+      Incremental.step(store, EventLog.decode(toDf(batch)), batchId = 1L)
       // listener delivery is async — wait for the bus to drain
       val deadline = System.currentTimeMillis() + 15000
       var last = -1L

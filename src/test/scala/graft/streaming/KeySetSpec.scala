@@ -89,10 +89,9 @@ class KeySetSpec extends ProjectorTestBase {
     assert(viaLocal === Set("k3" -> 3L, "k17" -> 17L, "k40" -> 40L))
     assert(viaDist === viaLocal)
 
-    // coversKeys merge: replacement carries every touched key → same final
-    // contents as the sweep-paying DataFrame path
+    // merge over a local key set: only the touched keys change
     store.mergeReplace("t", "k", KeySet.local(Array[Any]("k3", "k17")),
-      rows(Seq("k3" -> 300L, "k17" -> 1700L)), coversKeys = true)
+      rows(Seq("k3" -> 300L, "k17" -> 1700L)))
     val all = store.readAll("t", schema).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(all("k3") === 300L && all("k17") === 1700L && all("k5") === 5L)

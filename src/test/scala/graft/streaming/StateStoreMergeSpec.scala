@@ -24,9 +24,10 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     spark.createDataFrame(rows.map { case (k, v) => Row(k, v) }.asJava, schema)
   }
 
-  private def keysDf(keys: Seq[String]): DataFrame = {
+  private def keys(store: StateStore, ids: Seq[String]): KeySet = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(keys.map(Row(_)).asJava, StructType.fromDDL("k STRING"))
+    KeySet.fromDf(spark.createDataFrame(ids.map(Row(_)).asJava, StructType.fromDDL("k STRING")),
+      store.maxInsetKeys)
   }
 
   private def contents(store: StateStore): Set[(String, Int)] =
@@ -49,11 +50,11 @@ class StateStoreMergeSpec extends ProjectorTestBase {
       val expected =
         initial.filterNot { case (k, _) => touched.contains(k) }.toSet ++ replacement.toSet
 
-      store.mergeReplace("t", "k", keysDf(touched), toDf(replacement))
+      store.mergeReplace("t", "k", keys(store, touched), toDf(replacement))
       assert(contents(store) === expected, s"iter $iter: merge diverged from oracle")
 
       // full replay of the identical merge
-      store.mergeReplace("t", "k", keysDf(touched), toDf(replacement))
+      store.mergeReplace("t", "k", keys(store, touched), toDf(replacement))
       assert(contents(store) === expected, s"iter $iter: replay not idempotent")
 
       // crash remnant: a deleted key's stale row resurfaces in its bucket
@@ -66,7 +67,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
           .collect().head.getInt(1)
         toDf(Seq(staleKey -> -1)).write.mode("append").parquet(s"$dir/t/bucket=$bucket")
         assert(contents(store) !== expected, s"iter $iter: remnant injection had no effect")
-        store.mergeReplace("t", "k", keysDf(touched), toDf(replacement))
+        store.mergeReplace("t", "k", keys(store, touched), toDf(replacement))
         assert(contents(store) === expected, s"iter $iter: crash remnant survived re-merge")
       }
     }
@@ -106,19 +107,19 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     store.writeBucketed("t", "k", toDf(rows))
     // first call: a small key set — snapshot copies only its buckets
     val firstKeys = Seq("k0")
-    val got1 = store.readKeyedSnap(5L, "t", schema, "k", keysDf(firstKeys))
+    val got1 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, firstKeys))
       .collect().map(_.getString(0)).toSet
     assert(got1 === Set("k0"))
     // second call, same batch, different key set: before the manifest
     // top-up this silently returned only keys whose buckets happened to
     // be in the first copy
     val secondKeys = (1 until 40).map(i => s"k$i")
-    val got2 = store.readKeyedSnap(5L, "t", schema, "k", keysDf(secondKeys))
+    val got2 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, secondKeys))
       .collect().map(_.getString(0)).toSet
     assert(got2 === secondKeys.toSet,
       s"snapshot reuse missed ${(secondKeys.toSet -- got2).size} keys whose buckets were never copied")
     // and the snapshot view is stable: replaying both calls agrees
-    val replay = store.readKeyedSnap(5L, "t", schema, "k", keysDf(secondKeys))
+    val replay = store.readKeyedSnap(5L, "t", schema, "k", keys(store, secondKeys))
       .collect().map(_.getString(0)).toSet
     assert(replay === secondKeys.toSet)
   }
@@ -138,7 +139,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     val n0 = liveBucketCount()
     assert(n0 >= 2, s"test setup: expected a multi-bucket layout, got $n0")
     // first run: the pre-merge snapshot pins k0's bucket under count n0
-    val got1 = store.readKeyedSnap(9L, "t", schema, "k", keysDf(Seq("k0")))
+    val got1 = store.readKeyedSnap(9L, "t", schema, "k", keys(store, Seq("k0")))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     assert(got1 === Set("k0" -> 0))
     // ... then the batch's own merge rewrites k0 AND triggers a REBUCKET
@@ -146,7 +147,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // before the batch commits
     val grower = new StateStore(spark, dir, nBuckets = 2, maxBucketBytes = 256)
     val newKeys = (0 until 300).map(i => s"grow$i")
-    grower.mergeReplace("t", "k", keysDf("k0" +: newKeys),
+    grower.mergeReplace("t", "k", keys(grower, "k0" +: newKeys),
       toDf(("k0" -> 999) +: newKeys.map(_ -> -1)))
     val liveBuckets = liveBucketCount()
     assert(liveBuckets > n0, s"merge did not rebucket ($n0 -> $liveBuckets)")
@@ -157,7 +158,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // computed under the new live count copied post-merge dirs into the
     // snapshot: k0 came back doubled (0 AND 999).
     val replayStore = new StateStore(spark, dir, nBuckets = 2)
-    val replayRows = replayStore.readKeyedSnap(9L, "t", schema, "k", keysDf(Seq("k0")))
+    val replayRows = replayStore.readKeyedSnap(9L, "t", schema, "k", keys(replayStore, Seq("k0")))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     assert(replayRows === Set("k0" -> 0),
       s"snapshot replay not pre-merge-faithful after rebucket: $replayRows")
@@ -176,7 +177,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
       finally in.close()
     }
     val attempt = scala.util.Try {
-      replayStore.readKeyedSnap(9L, "t", schema, "k", keysDf(rows.map(_._1)))
+      replayStore.readKeyedSnap(9L, "t", schema, "k", keys(replayStore, rows.map(_._1)))
         .collect().map(_.getString(0)).toSet
     }
     assert(attempt.isFailure,
@@ -212,7 +213,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     }
     assert(contents(store) === initial.toSet, "snappy rewrite changed contents")
     // an lz4-era merge over the snappy store: delete k0/k1, rewrite k2, add new
-    store.mergeReplace("t", "k", keysDf(Seq("k0", "k1", "k2", "knew")),
+    store.mergeReplace("t", "k", keys(store, Seq("k0", "k1", "k2", "knew")),
       toDf(Seq("k2" -> 999, "knew" -> 1000)))
     val expected = initial.toSet -- Set("k0" -> 0, "k1" -> 1, "k2" -> 2) ++
       Set("k2" -> 999, "knew" -> 1000)

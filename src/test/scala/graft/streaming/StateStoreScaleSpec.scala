@@ -31,10 +31,10 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     spark.createDataFrame(ids.map(i => Row(s"key-$i", payload(i))).asJava, schema)
   }
 
-  private def keysDf(ids: Seq[Int]): DataFrame = {
+  private def keys(store: StateStore, ids: Seq[Int]): KeySet = {
     import scala.jdk.CollectionConverters._
-    spark.createDataFrame(ids.map(i => Row(s"key-$i")).asJava,
-      StructType.fromDDL("k STRING"))
+    KeySet.fromDf(spark.createDataFrame(ids.map(i => Row(s"key-$i")).asJava,
+      StructType.fromDDL("k STRING")), store.maxInsetKeys)
   }
 
   private def filesUnder(dir: java.io.File): Map[String, Long] = {
@@ -60,7 +60,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
 
       val totalBytes = filesUnder(dir).values.sum
       val before = filesUnder(dir)
-      store.mergeReplace("t", "k", keysDf(Seq(17, n / 2, n - 1)),
+      store.mergeReplace("t", "k", keys(store, Seq(17, n / 2, n - 1)),
         rowsDf(Seq(17, n / 2, n - 1)))
       val batchBytes = filesUnder(dir)
         .collect { case (p, len) if !before.contains(p) => len }.sum
@@ -87,7 +87,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     val c0 = store.bucketCount("t")
 
     // grow the table through the INCREMENTAL path only
-    store.mergeReplace("t", "k", keysDf(100 to 800), rowsDf(100 to 800))
+    store.mergeReplace("t", "k", keys(store, 100 to 800), rowsDf(100 to 800))
     assert(store.bucketCount("t") > c0,
       s"rebucket did not trigger (count ${store.bucketCount("t")})")
     val expected = ((1 to 20) ++ (100 to 800)).map(i => s"key-$i" -> payload(i)).toMap
@@ -95,14 +95,14 @@ class StateStoreScaleSpec extends ProjectorTestBase {
 
     // post-rebucket merges read/write the NEW layout consistently:
     // delete two keys, rewrite one, add one
-    store.mergeReplace("t", "k", keysDf(Seq(1, 100, 250, 999)),
+    store.mergeReplace("t", "k", keys(store, Seq(1, 100, 250, 999)),
       rowsDf(Seq(250, 999)))
     val expected2 = expected - "key-1" - "key-100" +
       ("key-250" -> payload(250)) + ("key-999" -> payload(999))
     assert(contents(store) === expected2, "post-rebucket merge diverged")
     // and keyed reads prune with the grown count (wrong-count hashing would
     // read the wrong bucket and return nothing)
-    val got = store.readKeyed("t", schema, "k", keysDf(Seq(250, 999, 1)))
+    val got = store.readKeyed("t", schema, "k", keys(store, Seq(250, 999, 1)))
       .collect().map(_.getString(0)).toSet
     assert(got === Set("key-250", "key-999"))
   }
@@ -119,7 +119,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
       maxBucketBytes = 4 * 1024)
     store.writeBucketed("t", "k", rowsDf(1 to 20))
     val c0 = store.bucketCount("t")
-    val ks = KeySet.fromDf(keysDf(100 to 800), store.maxInsetKeys)
+    val ks = keys(store, 100 to 800)
     val returned = store.mergeReplaceReturning("t", "k", ks, rowsDf(100 to 800))
     assert(store.bucketCount("t") > c0, "rebucket did not trigger")
     val got = returned.get.select("k").collect().map(_.getString(0)).toSet
@@ -144,7 +144,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     assert(bucketDirs === 1, s"expected one bucket dir, found $bucketDirs")
 
     // merges against the shrunk layout stay exact (delete, rewrite, insert)
-    store.mergeReplace("t", "k", keysDf(Seq(1, 2, 300)), rowsDf(Seq(2, 300)))
+    store.mergeReplace("t", "k", keys(store, Seq(1, 2, 300)), rowsDf(Seq(2, 300)))
     val expected = ((3 to 200).map(i => s"key-$i" -> payload(i)) ++
       Seq("key-2" -> payload(2), "key-300" -> payload(300))).toMap
     assert(contents(store) === expected, "merge on the shrunk layout diverged")
@@ -153,7 +153,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     // incremental growth path — count proportional to size both ways
     val big = new StateStore(spark, dir.getPath, nBuckets = 64,
       maxBucketBytes = 4 * 1024)
-    big.mergeReplace("t", "k", keysDf(500 to 900), rowsDf(500 to 900))
+    big.mergeReplace("t", "k", keys(big, 500 to 900), rowsDf(500 to 900))
     assert(big.bucketCount("t") > 1,
       s"regrowth after shrink did not fire (count ${big.bucketCount("t")})")
   }
@@ -167,7 +167,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     assert(new java.io.File(dir, "t/_nbuckets").delete())
     val reopened = new StateStore(spark, dir.getPath, nBuckets = 8)
     assert(reopened.bucketCount("t") === 8)
-    val got = reopened.readKeyed("t", schema, "k", keysDf(Seq(7, 23)))
+    val got = reopened.readKeyed("t", schema, "k", keys(reopened, Seq(7, 23)))
       .collect().map(_.getString(0)).toSet
     assert(got === Set("key-7", "key-23"))
   }
