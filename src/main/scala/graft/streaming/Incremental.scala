@@ -54,16 +54,18 @@ import org.apache.spark.sql.types.StructType
   *      is ≤ that is skipped outright — the common crash-between-step-and-
   *      checkpoint-commit case costs one metadata read;
   *   2. a step that crashed MID-way is redelivered and re-run, but every
-  *      PRE-merge read it performs (family/dim/affix/has-child snapshots)
-  *      was persisted under `_snap/batch=<id>/` before the first merge
-  *      ([[StateStore.readKeyedSnap]]), so the replay consumes the true
-  *      pre-batch state even from tables the crashed attempt already
-  *      merged. Post-merge reads (root map, affix/detach span lookups,
-  *      eligible-end recount inputs) re-derive identically because the
-  *      merges themselves are deterministic delete+reinserts of
-  *      (snapshot, batch) functions. Without the snapshots, a crash after
-  *      the st_span merge would lose a moved equipment's vacated route
-  *      nodes and permanently overcount conduit_slack there.
+  *      PRE-merge read it performs (family/dim/root/affix snapshots) goes
+  *      through a pin of its table taken under `_snap/batch=<id>/` before
+  *      that table's merge ([[StateStore.pinKeyed]]). A table is pinned
+  *      ONCE per batch, over every key its pre-merge readers need, and
+  *      the pin is never modified: later reads in the step and every read
+  *      of a replay see the pinned pre-batch state, even of tables the
+  *      crashed attempt already merged. Post-merge reads (eligible-end
+  *      recount inputs) re-derive identically because the merges
+  *      themselves are deterministic delete+reinserts of (snapshot,
+  *      batch) functions. Without the snapshots, a crash after the st_span
+  *      merge would lose a moved equipment's vacated route nodes and
+  *      permanently overcount conduit_slack there.
   */
 object Incremental {
 
@@ -269,11 +271,10 @@ object Incremental {
       // ONLY; merging the extras would rewrite their stored rows
       // byte-unchanged, widening the write bucket span for nothing — runs
       // with its output on a concurrent sub-section. The sub-section's
-      // mergeFamily re-reads the SAME pinned snapshot dirs (keys0 ⊆ keysAll
-      // and the manifest marks every bucket copied, so its readKeyedSnap is
-      // a listing, not a copy). keys0 is threaded into the merge so the
-      // fused-collect OVERFLOW fallback does not pay the distinct+collect
-      // job twice.
+      // mergeFamily reads the SAME pin (keys0 ⊆ keysAll, so its buckets are
+      // all pinned and the read copies nothing). keys0 is threaded into the
+      // merge so the fused-collect OVERFLOW fallback does not pay the
+      // distinct+collect job twice.
       def preViewMerge(table: String, idCol: String, partial: DataFrame,
           pairs: Seq[(String, String)], extraKeys: KeySet,
           output: (KeySet, DataFrame) => Unit): DataFrame = {
@@ -407,9 +408,7 @@ object Incremental {
             // unrestricted bSpan would add a row for EVERY batch-touched
             // span id (harmless for today's inner-joining consumer, but a
             // latent trap for any new one).
-            val adChildren = fusedOr("ad_children")
-            Folds.mergePartials(
-              Seq(snap, restrictToKeys(bSpan, adChildren, "id", bSpan.columns.toSeq)),
+            Folds.mergePartials(Seq(snap, fusedOr("ad_children").restrict(bSpan, "id")),
               "id", Seq("pl" -> "placed_seq"))
               .select(col("id").as("cable_id"),
                 col("pl").getField("walk_of_interest_id").as("interest_id"))
@@ -613,11 +612,17 @@ object Incremental {
         (hcK, if (hcK.knownEmpty) None else Some(batchHc))
       } else scala.concurrent.Future.successful((KeySet.empty: KeySet, None: Option[DataFrame]))
 
-      // pin the pre-merge span rows the interest section needs (driver-side
-      // snapshot copy, milliseconds) and launch it BEFORE the st_span merge
-      // — the section's longest chain (lastApply collect → interest
-      // merge → walk resolves) then overlaps the merge instead of queueing
-      // behind it
+      // st_span is pinned ONCE for both of its pre-merge readers: on an
+      // affix/detach batch the pin covers the affixed/detached children the
+      // interest section reads as well as the span keys mergeFamily reads
+      // (otherwise mergeFamily's own read pins the span keys). The pin is
+      // a driver-side copy, milliseconds, so the section launches BEFORE
+      // the st_span merge — its longest chain (lastApply collect →
+      // interest merge → walk resolves) then overlaps the merge instead of
+      // queueing behind it
+      val spanKeys = fusedOr("st_span")
+      if (hasAffixDetach)
+        store.pinKeyed(batchId, "st_span", ksUnion(spanKeys, fusedOr("ad_children")))
       if (interestRelevant) launchInterestSection(
         if (hasAffixDetach) Some(store.readKeyedSnap(batchId, "st_span", bSpan.schema,
           "id", fusedOr("ad_children")))
@@ -631,7 +636,7 @@ object Incremental {
       var fSpanWrite: Option[Future[Any]] = None
       val (seKeys, seStored, seMerged) = mergeFamily(store, "st_span", "id",
         bSpan, Derivations.spanPartialPairs, Nil, batchId = batchId,
-        batchKeys = fusedKeys.get("st_span"),
+        batchKeys = Some(spanKeys),
         asyncWrite = Some(body => fSpanWrite = Some(tracked(body()))))
 
       // ---------- span_equipment output (concurrent with affix chain) ----
@@ -743,12 +748,7 @@ object Incremental {
       // dependency on the merge, so the two merges run concurrently
       // instead of back-to-back on the 2-second path.
       val storedEnds = store.readKeyed("st_eligible_ends", eligSchema, "route_node_id", touchedNodes)
-      val keptEnds = eligKeys match {
-        case LocalKeys(vals, _) if vals.length <= cap =>
-          if (vals.isEmpty) storedEnds
-          else storedEnds.filter(col("id").isNull || !col("id").isin(vals.toSeq: _*))
-        case ks => storedEnds.join(broadcast(ks.toDf(spark, "id")), Seq("id"), "left_anti")
-      }
+      val keptEnds = eligKeys.exclude(storedEnds, "id")
       // ONE tail materialization (r9; fused from r8's two): the endRows
       // subtree — including the lazy hcFor checkpoint riding inside it —
       // and the kept stored ends materialize in the SAME job. The r8 shape
@@ -769,14 +769,14 @@ object Incremental {
         section {
           fHcForMat.foreach(Await.result(_, Duration.Inf))
           store.mergeReplace("st_has_child", "parent_id", hcKeys,
-            restrictToKeys(hcFor, hcKeys, "parent_id", hcFor.columns.toSeq)) }
+            hcKeys.restrict(hcFor, "parent_id")) }
       }
       // the merge's replacement is the checkpointed frame restricted to
       // the touched ids (= endRows exactly: kept excludes every eligKeys
       // id and all endRows ids are eligKeys ids) — endRows materializes
       // once, not once per consumer
       section { store.mergeReplace("st_eligible_ends", "id", eligKeys,
-        restrictToKeys(mergedEnds, eligKeys, "id", mergedEnds.columns.toSeq),
+        eligKeys.restrict(mergedEnds, "id"),
         bucketSrcCol = Some("route_node_id"), extraBucketVals = Some(touchedNodes)) }
       val slackRows0 = Derivations.slackFromEnds(mergedEnds)
       val slackRows = if (sinkActive) slackRows0.localCheckpoint(true) else slackRows0
@@ -937,21 +937,6 @@ object Incremental {
       schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Replacement rows recovered from a merge's returned frame
-    * ([[StateStore.mergeReplaceReturning]]): the post-merge bucket content
-    * restricted to the touched keys IS the replacement (the kept side
-    * excludes every touched key), so finalizers read the merge's own
-    * written files instead of materializing the replacement a second time. */
-  private def restrictToKeys(written: DataFrame, keys: KeySet, keyCol: String,
-      cols: Seq[String]): DataFrame = {
-    val filtered = keys match {
-      case LocalKeys(vals, _) => written.filter(col(keyCol).isin(vals.toSeq: _*))
-      case dk: DistKeys => written.join(
-        broadcast(dk.toDf(written.sparkSession, keyCol)), Seq(keyCol), "left_semi")
-    }
-    filtered.select(cols.map(col).toSeq: _*)
-  }
-
   /** Merge a batch partial onto stored state for its touched keys.
     * Returns (touchedKeys, storedSnapshot, merged).
     *
@@ -1017,7 +1002,11 @@ object Incremental {
         // frame (ONE materialization job per family instead of two)
         val merged = store
           .mergeReplaceReturning(table, idCol, keys, mergedPlan) match {
-            case Some(written) => restrictToKeys(written, keys, idCol, mergedPlan.columns.toSeq)
+            // the post-merge buckets restricted to the touched keys ARE the
+            // replacement (the kept side excludes every touched key), so
+            // finalizers read the merge's own written files
+            case Some(written) => keys.restrict(written, idCol)
+              .select(mergedPlan.columns.map(col).toSeq: _*)
             // wholesale-create path: the written table IS the merged state —
             // read it back (lazy parquet, no extra job)
             case None => store.readKeyed(table, batchPartial.schema, idCol, keys)
@@ -1048,7 +1037,7 @@ object Incremental {
     // frame (restricted to the touched keys) — one materialization, and
     // the post-overwrite sink call cannot recompute against rewritten files
     val out = store.mergeReplaceReturning(table, keyCol, keys, rows) match {
-      case Some(written) => restrictToKeys(written, keys, keyCol, rows.columns.toSeq)
+      case Some(written) => keys.restrict(written, keyCol).select(rows.columns.map(col).toSeq: _*)
       case None => store.readKeyed(table, rows.schema, keyCol, keys)
     }
     sink(table, keys.toDf(rows.sparkSession, keyCol), out)
@@ -1067,10 +1056,7 @@ object Incremental {
     if (!hasEvents) store.readSmall(table, batchPartial.schema)
     else {
       val stored = store.readSmallSnap(batchId, table, batchPartial.schema)
-      val merged = Folds.mergePartials(Seq(stored, batchPartial), idCol, pairs)
-        .localCheckpoint(true)
-      store.writeSmall(table, merged)
-      merged
+      store.writeSmall(table, Folds.mergePartials(Seq(stored, batchPartial), idCol, pairs))
     }
   }
 }

