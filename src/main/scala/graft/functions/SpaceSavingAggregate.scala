@@ -90,10 +90,9 @@ final class SpaceSavingBuffer(val capacity: Int) {
 }
 
 object SpaceSavingBuffer {
-  /** Wire format shared by the batch aggregate's partial exchange and
-    * the streaming twin's state store: capacity, floor, n, then sorted
-    * (key, cnt, err) triples — sorted so identical summaries are
-    * byte-identical regardless of HashMap history. */
+  /** Wire format of the aggregate's partial exchange: capacity, floor,
+    * n, then sorted (key, cnt, err) triples — sorted so identical
+    * summaries are byte-identical regardless of HashMap history. */
   def toBytes(b: SpaceSavingBuffer): Array[Byte] = {
     val buf = ByteBuffer.allocate(4 + 8 + 4 + b.counters.size * 24)
     buf.putInt(b.capacity); buf.putLong(b.floor); buf.putInt(b.counters.size)

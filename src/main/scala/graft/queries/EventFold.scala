@@ -551,13 +551,11 @@ object EventFold {
       .orderBy(col("touch_type"))
   }
 
-  /** The per-PURCHASE credit frame under [[attribution]]'s rollup —
-    * factored out so the streaming twin
-    * ([[graft.streaming.AttributionStream]]) can pin parity against the
-    * exact window-carry semantics, per purchase, before the ≤3-row
-    * rollup hides per-row differences. Input needs (user_id, event_id,
-    * ts_us, event_type, dv); output keeps those plus `touch_type`. */
-  private[graft] def attributionCreditsOf(ev: DataFrame): DataFrame = {
+  /** The per-PURCHASE credit frame under [[attribution]]'s rollup: the
+    * last click or view within the 7-day lookback credits each purchase.
+    * Input needs (user_id, event_id, ts_us, event_type, dv); output keeps
+    * those plus `touch_type`. */
+  private def attributionCreditsOf(ev: DataFrame): DataFrame = {
     val lookbackUs = 7L * 86400L * 1000000L
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts_us"), col("event_id"))
@@ -601,10 +599,8 @@ object EventFold {
 
   /** The per-user trigram frame under [[topPaths]] — (user_id,
     * event_id of the COMPLETING event, t1, t2, t3), one row per
-    * 3-event window in event_id order. Factored so the streaming twin
-    * ([[graft.streaming.PathStream]]) pins parity against the exact
-    * frame the batch rollup consumes. */
-  private[graft] def topPathTrigramsOf(ev: DataFrame): DataFrame = {
+    * 3-event window in event_id order. */
+  private def topPathTrigramsOf(ev: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))
     ev
       .withColumn("t1", lag(col("event_type"), 2).over(w))

@@ -162,13 +162,12 @@ object Graphs {
     val deg = e.select(col("u").as("n"))
       .unionByName(e.select(col("v").as("n")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
-    // Size gate on the degree broadcast (VERDICT r14 #8, the
-    // DecontamStream idiom): correct at |suppliers| but a driver OOM at
-    // a 10⁸-node graph. One bounded probe decides at plan-build time
-    // (limit cap+1 stops the count early); above the cap the two degree
-    // attachments fall back to shuffled equi-joins on the edge endpoints
-    // — the documented scale path. Tests force it with 0 and assert
-    // identical counts.
+    // Size gate on the degree broadcast (VERDICT r14 #8): correct at
+    // |suppliers| but a broadcast OOM at a 10⁸-node graph. One bounded probe
+    // decides at plan-build time (limit cap+1 stops the count early);
+    // above the cap the two degree attachments fall back to shuffled
+    // equi-joins on the edge endpoints — the documented scale path. Tests
+    // force it with 0 and assert identical counts.
     val bcast = deg.select(col("n")).limit(
       math.min(maxBroadcastNodes, Int.MaxValue - 1L).toInt + 1).count() <= maxBroadcastNodes
     def sized(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df

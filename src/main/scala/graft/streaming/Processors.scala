@@ -47,15 +47,11 @@ object Processors {
     * `handleInitialState` installs the seeded value before the first
     * batch's rows fold on top of it.
     *
-    * `ttl` retention (VERDICT r13 Missing #2, see [[StateTtl]]):
-    * default NONE, matching the reference (`ProjektorState.cs:23-125`
-    * holds every entity in heap forever). Opting in is only sound for
-    * deployments whose entities stop emitting after a terminal event
-    * within the horizon — an update arriving AFTER its entity's state
-    * evicted refolds from None, which the Created-gated families
-    * silently ignore. The seeded variants pin NONE: their initial
-    * state is the correctness baseline and must never age out. */
-  private abstract class LwwProcessor[I, S, O](ttl: TTLConfig)
+    * State never expires, matching the reference
+    * (`ProjektorState.cs:23-125` holds every entity in heap forever): an
+    * update arriving after its entity's state expired would refold from
+    * None, which the Created-gated families silently ignore. */
+  private abstract class LwwProcessor[I, S, O]
       extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[String, I, O, S] {
     protected def seqOf(e: I): Long
     protected def applyEvent(st: Option[S], e: I): Option[S]
@@ -65,7 +61,7 @@ object Processors {
 
     @transient private var state: ValueState[S] = _
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[S]("state", stateEncoder, ttl)
+      state = getHandle.getValueState[S]("state", stateEncoder, TTLConfig.NONE)
     override def handleInitialState(key: String, initial: S,
         timerValues: TimerValues): Unit =
       state.update(initial)
@@ -115,7 +111,7 @@ object Processors {
       case _ => st
     }
 
-  private def instProcessor(ttl: TTLConfig) = new LwwProcessor[InstEvent, InstState, InstCdc](ttl) {
+  private def instProcessor = new LwwProcessor[InstEvent, InstState, InstCdc] {
     protected def seqOf(e: InstEvent): Long = e.seq
     protected def applyEvent(st: Option[InstState], e: InstEvent): Option[InstState] =
       applyInst(st, e)
@@ -126,11 +122,10 @@ object Processors {
     protected def stateEncoder: Encoder[InstState] = Encoders.product[InstState]
   }
 
-  def installationCdc(events: Dataset[InstEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[InstCdc] = {
+  def installationCdc(events: Dataset[InstEvent]): Dataset[InstCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(instProcessor(ttl),
-      StateTtl.timeMode(ttl), OutputMode.Append())
+    events.groupByKey(_.id).transformWithState(instProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** [[installationCdc]] seeded from a backfill: `initial` carries the
@@ -140,7 +135,7 @@ object Processors {
   def installationCdcSeeded(events: Dataset[InstEvent],
       initial: Dataset[(String, InstState)]): Dataset[InstCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(instProcessor(TTLConfig.NONE),
+    events.groupByKey(_.id).transformWithState(instProcessor,
       TimeMode.None(), OutputMode.Append(),
       initial.groupByKey(_._1).mapValues(_._2))
   }
@@ -178,7 +173,7 @@ object Processors {
       case _ => st
     }
 
-  private def wtProcessor(ttl: TTLConfig) = new LwwProcessor[WtEvent, WtState, WtCdc](ttl) {
+  private def wtProcessor = new LwwProcessor[WtEvent, WtState, WtCdc] {
     protected def seqOf(e: WtEvent): Long = e.seq
     protected def applyEvent(st: Option[WtState], e: WtEvent): Option[WtState] =
       applyWt(st, e)
@@ -188,18 +183,17 @@ object Processors {
     protected def stateEncoder: Encoder[WtState] = Encoders.product[WtState]
   }
 
-  def workTaskCdc(events: Dataset[WtEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[WtCdc] = {
+  def workTaskCdc(events: Dataset[WtEvent]): Dataset[WtCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(wtProcessor(ttl),
-      StateTtl.timeMode(ttl), OutputMode.Append())
+    events.groupByKey(_.id).transformWithState(wtProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** [[workTaskCdc]] seeded from the backfill's `work_task` table rows. */
   def workTaskCdcSeeded(events: Dataset[WtEvent],
       initial: Dataset[(String, WtState)]): Dataset[WtCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(wtProcessor(TTLConfig.NONE),
+    events.groupByKey(_.id).transformWithState(wtProcessor,
       TimeMode.None(), OutputMode.Append(),
       initial.groupByKey(_._1).mapValues(_._2))
   }
@@ -233,7 +227,7 @@ object Processors {
       case _ => Some(WoiState(e.walk))
     }
 
-  private def woiProcessor(ttl: TTLConfig) = new LwwProcessor[WoiEvent, WoiState, WoiCdc](ttl) {
+  private def woiProcessor = new LwwProcessor[WoiEvent, WoiState, WoiCdc] {
     protected def seqOf(e: WoiEvent): Long = e.seq
     protected def applyEvent(st: Option[WoiState], e: WoiEvent): Option[WoiState] =
       applyWoi(st, e)
@@ -244,18 +238,17 @@ object Processors {
     protected def stateEncoder: Encoder[WoiState] = Encoders.product[WoiState]
   }
 
-  def interestCdc(events: Dataset[WoiEvent],
-      ttl: TTLConfig = TTLConfig.NONE): Dataset[WoiCdc] = {
+  def interestCdc(events: Dataset[WoiEvent]): Dataset[WoiCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(woiProcessor(ttl),
-      StateTtl.timeMode(ttl), OutputMode.Append())
+    events.groupByKey(_.id).transformWithState(woiProcessor,
+      TimeMode.None(), OutputMode.Append())
   }
 
   /** [[interestCdc]] seeded from the folded interest state (alive walks). */
   def interestCdcSeeded(events: Dataset[WoiEvent],
       initial: Dataset[(String, WoiState)]): Dataset[WoiCdc] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.id).transformWithState(woiProcessor(TTLConfig.NONE),
+    events.groupByKey(_.id).transformWithState(woiProcessor,
       TimeMode.None(), OutputMode.Append(),
       initial.groupByKey(_._1).mapValues(_._2))
   }

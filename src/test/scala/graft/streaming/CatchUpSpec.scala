@@ -13,7 +13,8 @@ import scala.util.Random
   * sees ONLY each batch plus keyed state reads, never the cumulative log —
   * must produce exactly the 8 tables of the one-shot batch backfill
   * (SURVEY.md §5.5). Each chunk is applied with its index as the batch id,
-  * the replay-safe path the stream runs. The O(delta) property is
+  * the replay-safe path the stream runs; one case injects a sink crash
+  * into each batch before redelivering it. The O(delta) property is
   * structural here (the full log is never handed to the engine);
   * IncrementalScanSpec additionally asserts the I/O volume.
   */
@@ -39,25 +40,37 @@ class CatchUpSpec extends ProjectorTestBase {
   private def evenCuts(n: Int, nChunks: Int): Seq[Int] =
     (1 until nChunks).map(i => i * n / nChunks)
 
-  /** Apply `rows` in batches split at `cuts` (row offsets; duplicates and
-    * out-of-range offsets are dropped), then compare with the backfill. */
-  private def runChunks(rows: Seq[Row], cuts: Seq[Int], label: String,
-      maxBucketBytes: Long = 256L << 20): Unit = {
+  /** `rows` split at `cuts` (row offsets; duplicates and out-of-range
+    * offsets are dropped). */
+  private def chunksOf(rows: Seq[Row], cuts: Seq[Int]): Seq[Seq[Row]] = {
     val n = rows.length
     val bounds = 0 +: cuts.filter(c => c > 0 && c < n).distinct.sorted :+ n
-    val chunks = bounds.sliding(2).map { case Seq(a, z) => rows.slice(a, z) }.toSeq
+    bounds.sliding(2).map { case Seq(a, z) => rows.slice(a, z) }.toSeq
+  }
 
+  private def newStore(label: String, maxBucketBytes: Long): StateStore = {
     val stateDir = Files.createTempDirectory(s"graft-catchup-$label").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16, maxBucketBytes = maxBucketBytes)
-    chunks.zipWithIndex.foreach { case (chunk, i) =>
-      Incremental.step(store, EventLog.decode(toDf(chunk)), batchId = i.toLong)
-    }
+    new StateStore(spark, stateDir, nBuckets = 16, maxBucketBytes = maxBucketBytes)
+  }
 
+  /** All 8 output tables in `store` equal the one-shot backfill of `rows`. */
+  private def assertBackfill(store: StateStore, rows: Seq[Row], label: String): Unit = {
     val oracle = Derivations.deriveAll(EventLog.decode(toDf(rows)).cache())
     oracle.foreach { case (table, expected) =>
       val got = store.readAll(table, Incremental.outputSchema(table))
       assert(normalized(got) === normalized(expected), s"table $table diverged ($label)")
     }
+  }
+
+  /** Apply `rows` in batches split at `cuts`, then compare with the
+    * backfill. */
+  private def runChunks(rows: Seq[Row], cuts: Seq[Int], label: String,
+      maxBucketBytes: Long = 256L << 20): Unit = {
+    val store = newStore(label, maxBucketBytes)
+    chunksOf(rows, cuts).zipWithIndex.foreach { case (chunk, i) =>
+      Incremental.step(store, EventLog.decode(toDf(chunk)), batchId = i.toLong)
+    }
+    assertBackfill(store, rows, label)
   }
 
   test("3-step incremental catch-up equals one-shot backfill on all 8 tables") {
@@ -93,6 +106,40 @@ class CatchUpSpec extends ProjectorTestBase {
       val rows = rowsOf(seed)
       runChunks(rows, randomCuts(seed, rows.length), s"s${seed}multi", maxBucketBytes = 1024)
     }
+  }
+
+  private class InjectedCrash(table: String)
+      extends RuntimeException(s"injected crash at the $table sink")
+
+  test("crash at a rotating sink point + redelivery converges on multi-bucket state") {
+    // each batch first runs with a sink that throws on one output table
+    // (a different one per batch), then is redelivered: the replay must
+    // read the crashed attempt's pins, which span several buckets here
+    // and may predate a rebucketing merge the attempt already made
+    val rows = rowsOf(5)
+    val chunks = chunksOf(rows, randomCuts(5, rows.length))
+    val store = newStore("s5crash", maxBucketBytes = 1024)
+    val tables = Incremental.outputKey.keys.toSeq.sorted
+    val crashed = chunks.zipWithIndex.count { case (chunk, i) =>
+      val crashTable = tables(i % tables.length)
+      val crashing: Incremental.Sink = (table, _, _) =>
+        if (table == crashTable) throw new InjectedCrash(crashTable)
+      val threw =
+        try {
+          Incremental.step(store, EventLog.decode(toDf(chunk)), crashing, batchId = i.toLong)
+          false
+        } catch { case _: InjectedCrash => true }
+      if (threw) {
+        assert(store.lastAppliedBatch === (if (i == 0) None else Some(i - 1L)),
+          s"batch $i crashed at $crashTable but was recorded as applied")
+        Incremental.step(store, EventLog.decode(toDf(chunk)), batchId = i.toLong)
+      }
+      threw
+    }
+    assertBackfill(store, rows, "s5crash")
+    // family-skip leaves a batch's untouched tables without a sink call
+    assert(crashed * 2 >= chunks.length, s"only $crashed of ${chunks.length} batches crashed")
+    assert(store.bucketCount("st_span") > 1, "st_span fell back to one bucket")
   }
 
   test("incremental slack is the invariant recount even on pathological logs (compat is batch-only)") {

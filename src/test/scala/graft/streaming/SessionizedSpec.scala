@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * event one µs past the gap opens a new session, and in append mode a
   * session is emitted only after the watermark passes its close — the
   * state-eviction contract that bounds streaming sessionization at any
-  * volume.
+  * volume. A query restarted on its checkpoint resumes the in-flight
+  * sessions.
   */
 class SessionizedSpec extends SparkTestBase {
   import spark.implicits._
@@ -84,6 +85,50 @@ class SessionizedSpec extends SparkTestBase {
       q.stop()
       spark.sql("DROP VIEW IF EXISTS user_sessions")
       ()
+    }
+  }
+
+  test("session twin merges a post-restart event into the recovered in-flight session") {
+    // a query restarted against the SAME checkpoint must resume its keyed
+    // session state: u1's session is split across the restart, so a
+    // fresh-state restart would open a second session and a reprocessing
+    // restart would double-emit
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    withConf(RocksDb) {
+      val base = java.nio.file.Files.createTempDirectory("graft_restart").toString
+      val (ckpt, out) = (s"$base/ckpt", s"$base/out")
+      try {
+        val input = MemoryStream[(Long, Long, Double)]
+        def start() = Sessionized.userSessions(
+            input.toDF().toDF("ts_us", "user_id", "value"),
+            gap = "30 seconds", lateness = "0 seconds")
+          .writeStream.format("parquet")
+          .option("path", out).option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append()).start()
+
+        // run 1: u1's session is IN FLIGHT (events at 0 s and 10 s; closes
+        // at 40 s; the watermark stops at 10 s, so nothing is emitted)
+        val q1 = start()
+        input.addData((us(0), 1L, 1.0), (us(10), 1L, 2.0))
+        q1.processAllAvailable()
+        q1.stop()
+
+        // run 2 (same checkpoint): u1's 20 s event must MERGE into the
+        // recovered session (fresh state would open a new session at 20 s);
+        // the 500 s row advances the watermark past the merged close (50 s)
+        // so exactly one finalized u1 session emits
+        val q2 = start()
+        input.addData((us(20), 1L, 4.0), (us(500), 9L, 9.0))
+        q2.processAllAvailable()
+        q2.stop()
+
+        val got = spark.read.parquet(out)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+          .filter(_._1 == 1L).toSet
+        assert(got === Set((1L, us(0), us(50), 3L, 7.0)),
+          s"expected ONE merged session spanning the restart, got: $got")
+      } finally { org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base)); () }
     }
   }
 }
