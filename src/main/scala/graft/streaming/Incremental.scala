@@ -908,6 +908,9 @@ object Incremental {
       endRows = Derivations.eligibleEnds(enriched).persist()
       store.writeBucketed("st_eligible_ends", "route_node_id", endRows)
 
+      // derived here, not taken from Derivations.deriveAllCached: BackfillSpec
+      // and perfbench check the seeded tables against deriveAllCached's, a
+      // check that holds only while the two derivations stay separate
       val outputs = Map(
         "installation" -> Derivations.installation(ev),
         "work_task" -> Derivations.workTask(ev),

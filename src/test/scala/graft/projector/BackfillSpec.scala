@@ -58,7 +58,7 @@ class BackfillSpec extends ProjectorTestBase {
     val highWater = Backfill.run(spark, s"$dir/events", s"$dir/out", Some(s"$dir/state"))
     assert(highWater === rows.length.toLong)
 
-    val store = new graft.streaming.StateStore(spark, s"$dir/state", nBuckets = 64)
+    val store = new graft.streaming.StateStore(spark, s"$dir/state")
     assert(store.highWater === rows.length.toLong)
     // seeded store holds the same 8 tables the parquet output does
     graft.streaming.Incremental.outputKey.keys.foreach { t =>

@@ -93,7 +93,7 @@ class JdbcSinkSpec extends SparkTestBase {
     val chunks = Seq(rows.slice(0, n / 3), rows.slice(n / 3, 2 * n / 3), rows.slice(2 * n / 3, n))
 
     val stateDir = Files.createTempDirectory("graft-jdbc").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16)
+    val store = new StateStore(spark, stateDir)
     chunks.zipWithIndex.foreach { case (c, i) =>
       Incremental.step(store, EventLog.decode(toDf(c)), sink, batchId = i.toLong)
     }

@@ -36,7 +36,7 @@ class MergeSinkSpec extends SparkTestBase {
     val chunks = bounds.sliding(2).map { case Seq(a, z) => rows.slice(a, z) }.toSeq
 
     val stateDir = Files.createTempDirectory("graft-mergesink").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16)
+    val store = new StateStore(spark, stateDir)
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       Incremental.step(store, EventLog.decode(toDf(chunk)), sink, batchId = i.toLong)
     }

@@ -44,7 +44,7 @@ class MergeSinkStreamSpec extends ProjectorTestBase {
 
     val dir = Files.createTempDirectory("graft-lake-stream").toFile
     val eventsDir = s"$dir/events"
-    val store = new StateStore(spark, s"$dir/state", nBuckets = 16)
+    val store = new StateStore(spark, s"$dir/state")
 
     val events = LogGen.scenario(new Random(73))
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }

@@ -50,7 +50,7 @@ class CatchUpSpec extends ProjectorTestBase {
 
   private def newStore(label: String, maxBucketBytes: Long): StateStore = {
     val stateDir = Files.createTempDirectory(s"graft-catchup-$label").toFile.getPath
-    new StateStore(spark, stateDir, nBuckets = 16, maxBucketBytes = maxBucketBytes)
+    new StateStore(spark, stateDir, maxBucketBytes = maxBucketBytes)
   }
 
   /** All 8 output tables in `store` equal the one-shot backfill of `rows`. */

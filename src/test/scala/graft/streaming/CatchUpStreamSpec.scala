@@ -44,7 +44,7 @@ class CatchUpStreamSpec extends ProjectorTestBase {
   test("streaming catch-up: crash after step, two checkpoint restarts, converges") {
     val dir = Files.createTempDirectory("graft-stream").toFile
     val eventsDir = s"$dir/events"
-    val store = new StateStore(spark, s"$dir/state", nBuckets = 16)
+    val store = new StateStore(spark, s"$dir/state")
 
     val events = LogGen.scenario(new Random(99))
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
@@ -79,7 +79,7 @@ class CatchUpStreamSpec extends ProjectorTestBase {
   test("deleting only _checkpoint does not silently skip replayed batches (qid guard)") {
     val dir = Files.createTempDirectory("graft-stream-reset").toFile
     val eventsDir = s"$dir/events"
-    val store = new StateStore(spark, s"$dir/state", nBuckets = 16)
+    val store = new StateStore(spark, s"$dir/state")
 
     val events = LogGen.scenario(new Random(41))
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
@@ -116,7 +116,7 @@ class CatchUpStreamSpec extends ProjectorTestBase {
     import graft.sinks.{FakeDb, JdbcSink}
     val dir = Files.createTempDirectory("graft-stream-jdbc").toFile
     val eventsDir = s"$dir/events"
-    val store = new StateStore(spark, s"$dir/state", nBuckets = 16)
+    val store = new StateStore(spark, s"$dir/state")
 
     FakeDb.reset()
     JdbcSink.bootstrap(FakeDb.connection(), "graft")

@@ -31,7 +31,7 @@ class FamilySkipSpec extends ProjectorTestBase {
 
   test("an installation-only batch leaves every other family's tables untouched") {
     val dir = Files.createTempDirectory("graft-famskip").toFile
-    val store = new StateStore(spark, dir.getPath, nBuckets = 8)
+    val store = new StateStore(spark, dir.getPath)
 
     // seed every family once so all tables exist
     val E = EventLog.EmptyUuid

@@ -92,7 +92,7 @@ class FusedKeysSpec extends ProjectorTestBase {
       Sim.InstCreated(s"inst-$i", s"I-$i", Some(s"ua-$i"), "ACTIVE", None))
     val rows = evts.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
     val stateDir = Files.createTempDirectory("graft-fusedkeys").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 4, maxInsetKeys = 5)
+    val store = new StateStore(spark, stateDir, maxInsetKeys = 5)
     Incremental.step(store, EventLog.decode(toDf(rows)), batchId = 0L)
     val got = store.readAll("installation", Incremental.outputSchema("installation"))
       .collect().map(r => (r.getAs[String]("id"), r.getAs[String]("installation_id"),
@@ -106,7 +106,7 @@ class FusedKeysSpec extends ProjectorTestBase {
       Sim.InstCreated("inst-a", "I-A", Some("ua-a"), "ACTIVE", None))
     val rows = evts.map(e => Row(1L, e.typ, e.payload))
     val stateDir = Files.createTempDirectory("graft-emptybatch").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 4)
+    val store = new StateStore(spark, stateDir)
     assert(Incremental.step(store, EventLog.decode(toDf(rows)), batchId = 0L))
     assert(store.lastAppliedBatch === Some(0L))
     // an events-free batch (e.g. a seeded prefix file wholly pruned by

@@ -52,7 +52,7 @@ class HandoffSpec extends ProjectorTestBase {
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
     val k = rows.length / 2
     val stateDir = Files.createTempDirectory("graft-handoff").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16)
+    val store = new StateStore(spark, stateDir)
 
     val hw = Incremental.seed(store, EventLog.decode(toDf(rows.take(k))))
     assert(hw === k.toLong)
@@ -76,7 +76,7 @@ class HandoffSpec extends ProjectorTestBase {
   test("CatchUp cold start dehydrates in place, warm restarts skip it, stream folds only the tail") {
     val dir = Files.createTempDirectory("graft-cold").toFile
     val eventsDir = s"$dir/events"
-    val store = new StateStore(spark, s"$dir/state", nBuckets = 16)
+    val store = new StateStore(spark, s"$dir/state")
 
     val events = LogGen.scenario(new Random(42))
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
@@ -107,11 +107,11 @@ class HandoffSpec extends ProjectorTestBase {
     val dir = Files.createTempDirectory("graft-handoff-io").toFile
     val eventsDir = s"$dir/events"
     val stateDir = s"$dir/state"
-    // pin the scale regime (see IncrementalScanSpec): bucket counts size by
-    // bytes since r6, and this table's ~11 KB mean bucket must stay inside
-    // the 32 KB band so neither shrink nor growth re-layouts it mid-test
-    val store = new StateStore(spark, stateDir, nBuckets = 64,
-      maxBucketBytes = 32768)
+    // pin the scale regime (see IncrementalScanSpec): the seed grows each
+    // new table from one bucket until its mean bucket fits 16 KB, and no
+    // touched bucket nears the 2 × 16 KB merge trigger, so nothing
+    // re-layouts mid-test
+    val store = new StateStore(spark, stateDir, maxBucketBytes = 16384)
 
     // big prefix: 6000 installations with incompressible remarks
     val rnd = new Random(13)
@@ -122,6 +122,9 @@ class HandoffSpec extends ProjectorTestBase {
     }
     writeChunk(prefix, eventsDir, "00-prefix")
     Incremental.seed(store, EventLog.decode(toDf(prefix)))
+    Seq("st_installation", "installation").foreach { t =>
+      assert(store.bucketCount(t) >= 32, s"$t seeded at ${store.bucketCount(t)} buckets")
+    }
 
     // tail: 3 updates, written as a second file under the same source path
     val tailRows = Seq("inst-17", "inst-2345", "inst-5999").zipWithIndex.map { case (id, i) =>

@@ -30,18 +30,18 @@ class IncrementalScanSpec extends ProjectorTestBase {
 
   test("micro-batch file reads are bounded by touched buckets, not state size") {
     val dir = Files.createTempDirectory("graft-scan").toFile
-    // maxBucketBytes pins the SCALE regime: the store sizes bucket counts
-    // by bytes in both directions (r6), so a truly small table collapses
-    // to one file and is legitimately read whole. This spec asserts the
-    // behavior at the size where buckets are justified — mean bucket
-    // (~11 KB with the incompressible remarks) sits mid-band for 32 KB
-    // buckets: no shrink (< 8 KB) and no growth (> 32 KB) can re-layout
-    // the table mid-test.
-    val store = new StateStore(spark, dir.getPath, nBuckets = 64,
-      maxBucketBytes = 32768)
+    // maxBucketBytes pins the SCALE regime: a new table starts at one
+    // bucket and grows until its mean bucket fits the budget, so a truly
+    // small table stays one file and is legitimately read whole. This spec
+    // asserts the behavior at the size where buckets are justified: the
+    // 0.7–0.85 MB installation tables grow to 64 buckets of 11–13 KB
+    // (with the incompressible remarks), and a merge grows a table only
+    // when a touched bucket passes 2 × 16 KB, so nothing re-layouts
+    // mid-test.
+    val store = new StateStore(spark, dir.getPath, maxBucketBytes = 16384)
 
     // seed: 4000 installations in one step → st_installation + installation
-    // output populated across all 64 buckets
+    // output populated across every bucket
     val rnd = new scala.util.Random(29)
     def remark(): String = Seq.fill(120)(('a' + rnd.nextInt(26)).toChar).mkString
     val seed = (1 to 4000).map { i =>
@@ -51,6 +51,9 @@ class IncrementalScanSpec extends ProjectorTestBase {
     Incremental.step(store, EventLog.decode(toDf(seed)), batchId = 0L)
     val stateBytes = dirBytes(dir)
     assert(stateBytes > 200000, s"seed state unexpectedly small: $stateBytes B")
+    Seq("st_installation", "installation").foreach { t =>
+      assert(store.bucketCount(t) >= 32, s"$t seeded at ${store.bucketCount(t)} buckets")
+    }
 
     // batch: 3 status updates — touches at most 3 buckets per table
     val batch = Seq("inst-17", "inst-1234", "inst-3999").zipWithIndex.map { case (id, i) =>

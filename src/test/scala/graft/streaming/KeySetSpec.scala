@@ -22,7 +22,11 @@ class KeySetSpec extends ProjectorTestBase {
 
   test("driver-side bucket ids match the column expression for engine key shapes") {
     val dir = Files.createTempDirectory("graft-keyset").toFile.getPath
-    val store = new StateStore(spark, dir, nBuckets = 13)
+    // a tiny bucket budget grows "t" past one bucket (at one, every key
+    // lands in bucket 0 and the parity check is vacuous)
+    val store = new StateStore(spark, dir, maxBucketBytes = 512)
+    store.writeBucketed("t", "k", spark.range(200).selectExpr("cast(id as string) as k"))
+    assert(store.bucketCount("t") > 1, s"test setup: t has ${store.bucketCount("t")} bucket")
     val rnd = new Random(11)
     val strings: Seq[Any] = (1 to 50).map(_ => rnd.alphanumeric.take(1 + rnd.nextInt(24)).mkString) ++
       Seq("", "Ø12-æøå", "rn-0-1", "a b c", "0001")
@@ -73,7 +77,7 @@ class KeySetSpec extends ProjectorTestBase {
 
   test("readKeyed and mergeReplace agree across local and distributed key sets") {
     val dir = Files.createTempDirectory("graft-keyset-rw").toFile.getPath
-    val store = new StateStore(spark, dir, nBuckets = 8)
+    val store = new StateStore(spark, dir)
     val schema = StructType(Seq(StructField("k", StringType), StructField("v", LongType)))
     import scala.jdk.CollectionConverters._
     def rows(kv: Seq[(String, Long)]) =

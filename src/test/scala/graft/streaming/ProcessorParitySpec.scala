@@ -31,7 +31,7 @@ class ProcessorParitySpec extends SparkTestBase {
 
     // path A — catch-up step over three chunks into a bucketed store
     val stateDir = Files.createTempDirectory("graft-parity").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16)
+    val store = new StateStore(spark, stateDir)
     val third = rows.length / 3
     Seq(rows.slice(0, third), rows.slice(third, 2 * third), rows.slice(2 * third, rows.length))
       .zipWithIndex.foreach { case (chunk, i) =>

@@ -37,7 +37,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     val rnd = new Random(7)
     (1 to 6).foreach { iter =>
       val dir = Files.createTempDirectory(s"graft-merge-$iter").toFile.getPath
-      val store = new StateStore(spark, dir, nBuckets = 8)
+      val store = new StateStore(spark, dir)
 
       val allKeys = (0 until 30).map(i => s"k$i")
       val initial = allKeys.filter(_ => rnd.nextBoolean()).map(k => k -> rnd.nextInt(100))
@@ -76,7 +76,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
   test("bucket aside from a crashed swap is recovered, not lost (ADVICE r7 medium)") {
     import org.apache.hadoop.fs.Path
     val dir = Files.createTempDirectory("graft-aside").toFile.getPath
-    val store = new StateStore(spark, dir, nBuckets = 4)
+    val store = new StateStore(spark, dir)
     val rows = (0 until 24).map(i => s"k$i" -> i)
     store.writeBucketed("t", "k", toDf(rows))
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -86,7 +86,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // pre-r8 delete-then-rename would have lost these rows permanently
     assert(fs.rename(new Path(s"$dir/t/$someBucket"),
       new Path(s"$dir/t/.old_$someBucket")))
-    val store2 = new StateStore(spark, dir, nBuckets = 4) // fresh process
+    val store2 = new StateStore(spark, dir) // fresh process
     assert(contents(store2) === rows.toSet,
       "rows of the crashed bucket swap were not recovered from the aside")
     assert(!fs.exists(new Path(s"$dir/t/.old_$someBucket")), "aside not cleaned up")
@@ -94,7 +94,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // pre-merge garbage and must be DISCARDED (live wins), not restored
     toDf(Seq("zz-stale" -> -99)).write.mode("overwrite")
       .parquet(s"$dir/t/.old_$someBucket")
-    val store3 = new StateStore(spark, dir, nBuckets = 4)
+    val store3 = new StateStore(spark, dir)
     assert(contents(store3) === rows.toSet, "completed-swap aside leaked into reads")
     assert(!fs.exists(new Path(s"$dir/t/.old_$someBucket")), "garbage aside not dropped")
     ()
@@ -104,7 +104,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     val dir = Files.createTempDirectory("graft-snappin").toFile.getPath
     // small bucket budget: the 400-row table spans several buckets, so a
     // key set can fall outside the first call's pin
-    val store = new StateStore(spark, dir, nBuckets = 2, maxBucketBytes = 1024)
+    val store = new StateStore(spark, dir, maxBucketBytes = 1024)
     val rows = (0 until 400).map(i => s"k$i" -> i)
     store.writeBucketed("t", "k", toDf(rows))
     val n = store.bucketCount("t")
@@ -143,7 +143,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // small bucket budget so the 400-row table lands on a MULTI-bucket
     // layout (a 1-bucket layout would make every later key set a subset
     // of the first copy and the guard untestable)
-    val store = new StateStore(spark, dir, nBuckets = 2, maxBucketBytes = 1024)
+    val store = new StateStore(spark, dir, maxBucketBytes = 1024)
     val rows = (0 until 400).map(i => s"k$i" -> i)
     store.writeBucketed("t", "k", toDf(rows))
     val n0 = liveBucketCount()
@@ -155,7 +155,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // ... then the batch's own merge rewrites k0 AND triggers a REBUCKET
     // (tinier bucket budget + enough new rows), and the process crashes
     // before the batch commits
-    val grower = new StateStore(spark, dir, nBuckets = 2, maxBucketBytes = 256)
+    val grower = new StateStore(spark, dir, maxBucketBytes = 256)
     val newKeys = (0 until 300).map(i => s"grow$i")
     grower.mergeReplace("t", "k", keys(grower, "k0" +: newKeys),
       toDf(("k0" -> 999) +: newKeys.map(_ -> -1)))
@@ -166,7 +166,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // so the view stays pre-merge (one row, the original value — not the
     // merged 999). Ids computed under the new live count would read
     // post-merge dirs: k0 would come back doubled (0 AND 999).
-    val replayStore = new StateStore(spark, dir, nBuckets = 2)
+    val replayStore = new StateStore(spark, dir)
     val replayRows = replayStore.readKeyedSnap(9L, "t", schema, "k", keys(replayStore, Seq("k0")))
       .collect().map(r => (r.getString(0), r.getInt(1))).toSet
     assert(replayRows === Set("k0" -> 0),
@@ -196,7 +196,7 @@ class StateStoreMergeSpec extends ProjectorTestBase {
     // keeps working after the writers switched to lz4 — merged buckets
     // come out lz4, untouched buckets stay snappy, reads see one table
     val dir = Files.createTempDirectory("graft-codec").toFile.getPath
-    val store = new StateStore(spark, dir, nBuckets = 4)
+    val store = new StateStore(spark, dir)
     val initial = (0 until 24).map(i => s"k$i" -> i)
     store.writeBucketed("t", "k", toDf(initial))
     // rewrite every bucket's files with snappy IN PLACE (simulating the

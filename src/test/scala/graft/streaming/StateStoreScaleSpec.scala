@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ProjectorTestBase
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -11,7 +12,7 @@ import java.nio.file.Files
   * IncrementalScanSpec's read-side proof: a batch touching 3 keys must
   * WRITE bytes bounded by `touchedBuckets × bucket-size target`, a
   * constant in table size, because the bucket count grows with the table.
-  * Without the growth the per-batch write cost is `O(state / nBuckets)` —
+  * Without the growth the per-batch write cost is `O(state / buckets)` —
   * at 100× state a 3-key batch on a 2-second trigger would rewrite
   * gigabytes.
   */
@@ -52,8 +53,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     // absorb the growth so the per-batch write cost stays flat
     val written = Seq(8000, 32000).map { n =>
       val dir = Files.createTempDirectory(s"graft-wamp-$n").toFile
-      val store = new StateStore(spark, dir.getPath, nBuckets = 4,
-        maxBucketBytes = 16 * 1024)
+      val store = new StateStore(spark, dir.getPath, maxBucketBytes = 16 * 1024)
       store.writeBucketed("t", "k", rowsDf(1 to n))
       assert(store.bucketCount("t") > 4,
         s"n=$n: seed did not grow the bucket count (still ${store.bucketCount("t")})")
@@ -81,8 +81,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
 
   test("incremental growth: merges trigger a rebucket and contents survive it") {
     val dir = Files.createTempDirectory("graft-grow").toFile
-    val store = new StateStore(spark, dir.getPath, nBuckets = 2,
-      maxBucketBytes = 4 * 1024)
+    val store = new StateStore(spark, dir.getPath, maxBucketBytes = 4 * 1024)
     store.writeBucketed("t", "k", rowsDf(1 to 20))
     val c0 = store.bucketCount("t")
 
@@ -115,8 +114,7 @@ class StateStoreScaleSpec extends ProjectorTestBase {
     // new count or downstream finalizers silently lose the keys that now
     // hash elsewhere.
     val dir = Files.createTempDirectory("graft-grow-ret").toFile
-    val store = new StateStore(spark, dir.getPath, nBuckets = 2,
-      maxBucketBytes = 4 * 1024)
+    val store = new StateStore(spark, dir.getPath, maxBucketBytes = 4 * 1024)
     store.writeBucketed("t", "k", rowsDf(1 to 20))
     val c0 = store.bucketCount("t")
     val ks = keys(store, 100 to 800)
@@ -128,47 +126,56 @@ class StateStoreScaleSpec extends ProjectorTestBase {
       s"returned frame lost ${(expected -- got).size} of the touched keys across the rebucket")
   }
 
-  test("wholesale writes shrink an oversized layout; merges read the new count") {
-    // the r6 mirror of the growth bound: a SMALL table must not keep the
-    // constructor's 64-bucket floor (64 near-empty files ⇒ every micro-
-    // batch merge pays ~all of them in file opens — per-file fixed cost,
-    // not data, dominates the 2-second loop)
-    val dir = Files.createTempDirectory("graft-shrink").toFile
-    val store = new StateStore(spark, dir.getPath, nBuckets = 64,
-      maxBucketBytes = 256L << 20)
-    store.writeBucketed("t", "k", rowsDf(1 to 200)) // a few hundred KB at most
+  test("a wholesale write puts a small new table at one bucket in one job; merges read it") {
+    // a SMALL table is one file (many near-empty files ⇒ every micro-batch
+    // merge pays ~all of them in file opens — per-file fixed cost, not
+    // data, dominates the 2-second loop), and it is written exactly once:
+    // one Spark job, no read-back and rewrite at another count
+    val dir = Files.createTempDirectory("graft-onebucket").toFile
+    val store = new StateStore(spark, dir.getPath, maxBucketBytes = 256L << 20)
+    val df = rowsDf(1 to 200) // a few hundred KB at most
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      store.writeBucketed("t", "k", df)
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 1, s"the first write of a small table ran ${jobs.get} Spark jobs")
     assert(store.bucketCount("t") === 1,
-      s"small table kept ${store.bucketCount("t")} buckets — shrink did not fire")
+      s"small table written at ${store.bucketCount("t")} buckets")
     val bucketDirs = Option(new java.io.File(dir, "t").listFiles()).get
       .count(_.getName.startsWith("bucket="))
     assert(bucketDirs === 1, s"expected one bucket dir, found $bucketDirs")
 
-    // merges against the shrunk layout stay exact (delete, rewrite, insert)
+    // merges against the one-bucket layout stay exact (delete, rewrite, insert)
     store.mergeReplace("t", "k", keys(store, Seq(1, 2, 300)), rowsDf(Seq(2, 300)))
     val expected = ((3 to 200).map(i => s"key-$i" -> payload(i)) ++
       Seq("key-2" -> payload(2), "key-300" -> payload(300))).toMap
-    assert(contents(store) === expected, "merge on the shrunk layout diverged")
+    assert(contents(store) === expected, "merge on the one-bucket layout diverged")
 
-    // a shrunk table that later grows large re-expands through the
-    // incremental growth path — count proportional to size both ways
-    val big = new StateStore(spark, dir.getPath, nBuckets = 64,
-      maxBucketBytes = 4 * 1024)
+    // a one-bucket table that later grows large expands through the
+    // incremental growth path
+    val big = new StateStore(spark, dir.getPath, maxBucketBytes = 4 * 1024)
     big.mergeReplace("t", "k", keys(big, 500 to 900), rowsDf(500 to 900))
     assert(big.bucketCount("t") > 1,
-      s"regrowth after shrink did not fire (count ${big.bucketCount("t")})")
+      s"growth from one bucket did not fire (count ${big.bucketCount("t")})")
   }
 
-  test("a store reopened on an old layout keeps the constructor bucket count") {
-    val dir = Files.createTempDirectory("graft-compat").toFile
-    val store = new StateStore(spark, dir.getPath, nBuckets = 8,
-      maxBucketBytes = Long.MaxValue / 4)
-    store.writeBucketed("t", "k", rowsDf(1 to 50))
-    // simulate a pre-layout-file store (round-4 format)
-    assert(new java.io.File(dir, "t/_nbuckets").delete())
-    val reopened = new StateStore(spark, dir.getPath, nBuckets = 8)
-    assert(reopened.bucketCount("t") === 8)
-    val got = reopened.readKeyed("t", schema, "k", keys(reopened, Seq(7, 23)))
-      .collect().map(_.getString(0)).toSet
-    assert(got === Set("key-7", "key-23"))
+  test("a bucketed table without its _nbuckets entry fails loudly, naming the table") {
+    val dir = Files.createTempDirectory("graft-nolayout").toFile
+    val store = new StateStore(spark, dir.getPath, maxBucketBytes = 1024)
+    store.writeBucketed("t_nolayout", "k", rowsDf(1 to 50))
+    assert(store.bucketCount("t_nolayout") > 1, "test setup: expected a multi-bucket layout")
+    // the count its files were hashed with is now unknown
+    assert(new java.io.File(dir, "t_nolayout/_nbuckets").delete())
+    val reopened = new StateStore(spark, dir.getPath)
+    val attempt = scala.util.Try(
+      reopened.readKeyed("t_nolayout", schema, "k", keys(reopened, Seq(7, 23))).collect())
+    assert(attempt.isFailure, "a table without a layout entry was read under a guessed count")
+    val msg = attempt.failed.get.getMessage
+    assert(msg.contains("t_nolayout") && msg.contains("_nbuckets"), s"unexpected error: $msg")
   }
 }

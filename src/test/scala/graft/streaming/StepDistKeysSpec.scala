@@ -30,7 +30,7 @@ class StepDistKeysSpec extends ProjectorTestBase {
     def toDf(rs: Seq[Row]) = spark.createDataFrame(rs.asJava, envelopeSchema)
 
     val stateDir = Files.createTempDirectory("graft-distkeys").toFile.getPath
-    val store = new StateStore(spark, stateDir, nBuckets = 16, maxInsetKeys = 5)
+    val store = new StateStore(spark, stateDir, maxInsetKeys = 5)
     val third = rows.length / 3
     Seq(rows.slice(0, third), rows.slice(third, 2 * third), rows.slice(2 * third, rows.length))
       .zipWithIndex.foreach { case (chunk, i) =>
