@@ -19,14 +19,20 @@ object Backfill {
     * 8 table writes ([[Derivations.deriveAllCached]]).
     *
     * `stateDir`, when set, additionally seeds a catch-up
-    * [[graft.streaming.StateStore]] from the same cached log
-    * ([[graft.streaming.Incremental.seed]]) and records the high-water seq
-    * there — the reference's dehydrate→flip handoff
+    * [[graft.streaming.StateStore]] from the same log through the catch-up
+    * derivation ([[graft.streaming.Incremental.seed]], one
+    * [[graft.streaming.Incremental.step]] over the whole log — independent
+    * of the tables written above) and records the high-water seq there —
+    * the reference's dehydrate→flip handoff
     * (`RelationalDatabaseProjection.cs:460-495`): a subsequently started
     * [[graft.streaming.CatchUp]] continues incrementally from exactly
-    * where this replay stopped instead of refolding the log. */
+    * where this replay stopped instead of refolding the log. A `stateDir`
+    * that already holds a seeded store is refused before anything is
+    * derived or written. */
   def run(spark: SparkSession, eventsPath: String, outDir: String,
       stateDir: Option[String] = None): Long = {
+    val store = stateDir.map(new StateStore(spark, _))
+    store.foreach(Incremental.requireCold)
     val ev = EventLog.decode(
       spark.read.schema(EventLog.envelopeSchema).parquet(eventsPath)).cache()
     val (tables, release) = Derivations.deriveAllCached(ev)
@@ -36,10 +42,7 @@ object Backfill {
       // an empty event dir is a valid cold start, not an NPE)
       val hwRow = ev.agg(org.apache.spark.sql.functions.max("seq")).head()
       val hw = if (hwRow.isNullAt(0)) Long.MinValue else hwRow.getLong(0)
-      stateDir.foreach { sd =>
-        Incremental.seed(new StateStore(spark, sd), ev)
-        ()
-      }
+      store.foreach { st => Incremental.seed(st, ev); () }
       hw
     } finally {
       release()

@@ -19,8 +19,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Phase handoff (the reference's `_bulkMode` flip,
   * `RelationalDatabaseProjection.cs:460-495`, `Worker.cs:32-48`): when the
-  * store was seeded by a backfill ([[Incremental.seed]]), the stream
-  * filters `seq > highWater` — parquet row-group stats push the predicate
+  * store was seeded at cold start ([[Incremental.seed]]: the whole log
+  * folded as one [[Incremental.step]]), the stream filters
+  * `seq > highWater` — parquet row-group stats push the predicate
   * into the scan, so event files wholly below the high-water cost only a
   * footer read and the catch-up phase's I/O is bounded by the log TAIL,
   * not the replayed prefix.
@@ -37,9 +38,10 @@ object CatchUp {
   /** Cold-start dehydration — the reference's single-process lifecycle
     * (`Worker.cs:32-48`: dehydrate the full store, flip `_bulkMode`, then
     * poll): when the store was never seeded AND no streaming checkpoint
-    * exists, batch-fold every event file already in `eventsDir` through
-    * [[Incremental.seed]] (the fast batch derivation, not the per-batch
-    * incremental path) and record the high-water seq. A warm restart
+    * exists, fold every event file already in `eventsDir` through
+    * [[Incremental.seed]] — one [[Incremental.step]] over the whole
+    * existing log, the same derivation every later batch runs — and record
+    * the high-water seq. A warm restart
     * (checkpoint present) or a store seeded by a prior
     * [[graft.projector.Backfill]] run skips this. Returns true when the
     * dehydration ran. */

@@ -826,115 +826,38 @@ object Incremental {
     }
   }
 
-  /** (root_segment_id, id) index rows of a span partial frame. */
-  private def rootIndexOf(spanPartial: DataFrame): DataFrame = spanPartial.select(
-    col("pl").getField("structures").getItem(0).getField("spanSegments")
-      .getItem(0).getField("id").as("root_segment_id"),
-    col("id"))
-    .filter(col("root_segment_id").isNotNull)
-
-  /** Seed the store from a FULL decoded event log using the batch
-    * derivations — the backfill→catch-up phase handoff the reference gets
-    * from `_bulkMode` (`RelationalDatabaseProjection.cs:460-495`,
-    * `Worker.cs:32-48`): one fast batch pass dehydrates the whole log into
-    * the per-family partial folds, auxiliary state tables, and output
-    * tables, in exactly the bucketed layout [[step]] maintains — then the
-    * stream continues strictly past the recorded high-water `seq`
+  /** Cold start: fold a FULL decoded event log into an empty store as
+    * batch 0 of [[step]] — the one derivation the stream runs, as the
+    * reference's bulk mode runs its per-event handlers and only gates the
+    * DML (`RelationalDatabaseProjection.cs:228-236,460-495`) — then record
+    * the high-water `seq` the stream continues strictly past
     * ([[StateStore.setHighWater]], consumed by [[CatchUp.startQuery]]).
-    *
-    * Every state table is the full-log value of the same expression the
-    * incremental path maintains per batch, so `seed(log[0,k])` followed by
-    * `step`s over `(k,n]` equals `seed(log[0,n])` — proven by HandoffSpec.
-    *
-    * Returns the high-water seq (Long.MinValue on an empty log). */
+    * The log's bound is fixed in the store (`seed_bound`) before the step,
+    * so a seed that crashed re-runs — even over a log that has grown
+    * since — as a redelivery of the same batch 0 on the step's own pins,
+    * and records the high water of what the tables hold. The applied-batch
+    * marker and the bound are cleared at the end, so the stream's own
+    * batch 0 applies. Returns the high water (Long.MinValue on an empty
+    * log, which leaves the store cold). */
   def seed(store: StateStore, evDecoded: DataFrame): Long = {
-    val ev = evDecoded.persist()
-    // released in the finally block (not just the success path — a
-    // mid-seed failure must not leak cached frames into the long-lived
-    // catch-up session)
-    var spanPart: DataFrame = null
-    var timeline: DataFrame = null
-    var endRows: DataFrame = null
-    try {
-      // dimension tables
-      store.writeSmall("dim_span_equipment_spec", Derivations.spanEquipmentSpecsPartial(ev))
-      store.writeSmall("dim_node_container_spec", Derivations.nodeContainerSpecsPartial(ev))
-      store.writeSmall("dim_span_structure_spec", Derivations.spanStructureSpecsPartial(ev))
-      store.writeSmall("dim_terminal_spec", Derivations.terminalSpecsPartial(ev))
-      val eqSpecs = Derivations.spanEquipmentSpecs(ev)
-      val structSpecs = Derivations.spanStructureSpecs(ev)
-
-      // per-family partial folds (the state [[step]] merges onto)
-      spanPart = Derivations.spanEquipmentPartial(ev).persist()
-      store.writeBucketed("st_installation", "id", Derivations.installationPartial(ev))
-      store.writeBucketed("st_work_task", "id", Derivations.workTaskPartial(ev))
-      store.writeBucketed("st_span", "id", spanPart)
-      store.writeBucketed("st_node_container", "id", Derivations.nodeContainerPartial(ev))
-      store.writeBucketed("st_interest", "interest_id", Derivations.interestPartial(ev))
-      store.writeBucketed("st_terminal", "id", Derivations.terminalPartial(
-        Derivations.terminalPlacementRows(Derivations.containerRelEvents(ev),
-          Derivations.terminalPlacements(ev), Derivations.terminalSpecs(ev)),
-        Derivations.terminalUpdateRows(ev)))
-
-      // auxiliary cross-entity state
-      val rootMap = rootIndexOf(spanPart)
-      store.writeBucketed("st_root_segment", "root_segment_id", rootMap)
-      val affixes = Derivations.affixEdges(ev).join(rootMap, Seq("root_segment_id"))
-        .select(col("child_id"), col("seq"), col("id").as("parent_id"))
-      val detaches = ev.filter(col("event_type") === "SpanEquipmentDetachedFromParent")
-        .select(col("p.spanEquipmentId").as("child_id"), col("seq"))
-      timeline = Derivations.affixNextDetach(affixes, detaches).persist()
-      store.writeBucketed("st_child_affixes", "child_id",
-        timeline.filter(col("next_detach_seq").isNull)
-          .select(col("child_id"), col("parent_id"), col("seq")).distinct())
-      // has-child flag timeline → final flag + greatest contributing seq
-      val setRows = timeline.select(col("parent_id"), col("seq"), lit(true).as("has_child"))
-      val clearRows = timeline.filter(col("next_detach_seq").isNotNull)
-        .select(col("parent_id"), col("next_detach_seq").as("seq"), lit(false).as("has_child"))
-      val resetRows = ev.filter(col("event_type") === "SpanEquipmentPlacedInRouteNetwork")
-        .select(col("p.equipment.id").as("parent_id"), col("seq"), lit(false).as("has_child"))
-      val hc = setRows.unionByName(clearRows).unionByName(resetRows)
-        .groupBy(col("parent_id"))
-        .agg(max_by(col("has_child"), col("seq")).as("has_child"),
-          max(col("seq")).as("hc_seq"))
-      store.writeBucketed("st_has_child", "parent_id", hc)
-
-      // eligible conduit ends (bucketed by route node for the per-node
-      // slack recount) + the 8 output tables
-      val enriched = Derivations
-        .withSpecDims(Derivations.spanStateFromPartial(spanPart), eqSpecs, structSpecs)
-        .join(hc.select(col("parent_id").as("id"), col("has_child")), Seq("id"), "left")
-        .na.fill(false, Seq("has_child"))
-      endRows = Derivations.eligibleEnds(enriched).persist()
-      store.writeBucketed("st_eligible_ends", "route_node_id", endRows)
-
-      // derived here, not taken from Derivations.deriveAllCached: BackfillSpec
-      // and perfbench check the seeded tables against deriveAllCached's, a
-      // check that holds only while the two derivations stay separate
-      val outputs = Map(
-        "installation" -> Derivations.installation(ev),
-        "work_task" -> Derivations.workTask(ev),
-        "node_container" -> Derivations.nodeContainer(ev),
-        "span_equipment" -> Derivations.spanEquipmentFromState(
-          Derivations.spanStateFromPartial(spanPart), eqSpecs, structSpecs),
-        "service_termination" -> Derivations.serviceTermination(ev),
-        "rel_interest_to_route_element" -> Derivations.relInterestToRouteElement(ev),
-        "rel_fiber_cable_to_route_element" -> Derivations.relFiberCableToRouteElement(ev),
-        "conduit_slack" -> Derivations.slackFromEnds(endRows))
-      outputs.foreach { case (table, df) =>
-        store.writeBucketed(table, outputKey(table), df)
-      }
-
-      val hwRow = ev.agg(max(col("seq"))).head()
+    requireCold(store)
+    val bound = store.readMeta("seed_bound").map(_.toLong).getOrElse {
+      val hwRow = evDecoded.agg(max(col("seq"))).head()
       val hw = if (hwRow.isNullAt(0)) Long.MinValue else hwRow.getLong(0)
-      store.setHighWater(hw)
+      store.writeMeta("seed_bound", hw.toString)
       hw
-    } finally {
-      Seq(spanPart, timeline, endRows).foreach(df => if (df != null) df.unpersist())
-      ev.unpersist()
-      ()
     }
+    step(store, evDecoded.filter(col("seq") <= bound), batchId = 0)
+    store.setHighWater(bound)
+    store.clearLastAppliedBatch()
+    store.deleteMeta("seed_bound")
+    bound
   }
+
+  /** Fails unless `store` was never seeded; the error names its root. */
+  def requireCold(store: StateStore): Unit =
+    require(store.highWater == Long.MinValue,
+      s"Incremental.seed: store ${store.root} is already seeded")
 
   private def emptyFrame(spark: org.apache.spark.sql.SparkSession,
       schema: StructType): DataFrame =

@@ -520,6 +520,11 @@ class StateStore(spark: SparkSession, val root: String,
     if (fs.exists(target)) Some(readText(target)) else None
   }
 
+  def deleteMeta(name: String): Unit = {
+    fs.delete(new Path(s"$root/_meta_$name"), false)
+    ()
+  }
+
   /** Greatest event seq already folded by a backfill seed (the stream
     * starts strictly after it). `Long.MinValue` when never seeded. */
   def highWater: Long = readMeta("high_water").map(_.toLong).getOrElse(Long.MinValue)
@@ -533,10 +538,7 @@ class StateStore(spark: SparkSession, val root: String,
     * keeping the store silently skips every replayed batch). */
   def lastAppliedBatch: Option[Long] = readMeta("applied_batch").map(_.toLong)
   def setLastAppliedBatch(batchId: Long): Unit = writeMeta("applied_batch", batchId.toString)
-  def clearLastAppliedBatch(): Unit = {
-    fs.delete(new Path(s"$root/_meta_applied_batch"), false)
-    ()
-  }
+  def clearLastAppliedBatch(): Unit = deleteMeta("applied_batch")
 
   // --- per-batch pre-merge snapshots (replay atomicity) ---
   // A step's later sections consume PRE-batch reads of tables it merged
@@ -641,13 +643,14 @@ class StateStore(spark: SparkSession, val root: String,
   }
 
   /** Drop snapshot dirs of other batches (only one batch is ever in
-    * flight) and, when `including`, this batch's own. */
+    * flight) and, when `including`, this batch's own — then the whole
+    * `_snap` dir, so a committed store holds no snapshot dir at all. */
   def clearSnapshots(batchId: Long, including: Boolean = false): Unit = {
     val snapRoot = new Path(s"$root/_snap")
-    if (fs.exists(snapRoot)) {
+    if (including) fs.delete(snapRoot, true)
+    else if (fs.exists(snapRoot)) {
       fs.listStatus(snapRoot).foreach { st =>
-        val keep = !including && st.getPath.getName == s"batch=$batchId"
-        if (!keep) fs.delete(st.getPath, true)
+        if (st.getPath.getName != s"batch=$batchId") fs.delete(st.getPath, true)
       }
     }
   }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.queries
 
-  /** transformWithState needs the RocksDB state store provider. */
+  /** The RocksDB state store provider (the session twin's restart case). */
   val RocksDb: (String, String) = "spark.sql.streaming.stateStore.providerClass" ->
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 

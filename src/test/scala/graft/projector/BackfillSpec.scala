@@ -43,8 +43,12 @@ class BackfillSpec extends ProjectorTestBase {
     val dir = Files.createTempDirectory("graft-backfill-empty").toFile.getPath
     val schema = StructType.fromDDL("seq BIGINT, event_type STRING, payload STRING")
     spark.createDataFrame(List.empty[Row].asJava, schema).write.parquet(s"$dir/events")
-    val highWater = Backfill.run(spark, s"$dir/events", s"$dir/out")
+    val highWater = Backfill.run(spark, s"$dir/events", s"$dir/out", Some(s"$dir/state"))
     assert(highWater === Long.MinValue)
+    val store = new graft.streaming.StateStore(spark, s"$dir/state")
+    assert(store.highWater === Long.MinValue)
+    assert(graft.streaming.CatchUp.dehydrateIfCold(spark, s"$dir/events", store),
+      "an empty seed must leave the store cold")
   }
 
   test("Backfill.run with stateDir seeds the catch-up store and records the high water") {
@@ -70,5 +74,11 @@ class BackfillSpec extends ProjectorTestBase {
         .collect().map(_.toSeq.toVector).toSet
       assert(fromStore === fromParquet, s"seeded store table $t diverges from parquet output")
     }
+    // a second backfill into the now-warm store is refused before it
+    // derives or writes anything
+    val warm = intercept[IllegalArgumentException](
+      Backfill.run(spark, s"$dir/events", s"$dir/out2", Some(s"$dir/state")))
+    assert(warm.getMessage.contains(s"$dir/state"), warm.getMessage)
+    assert(!new java.io.File(s"$dir/out2").exists())
   }
 }

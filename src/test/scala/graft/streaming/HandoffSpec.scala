@@ -12,12 +12,13 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicLong
 import scala.util.Random
 
-/** The backfill→catch-up phase handoff (VERDICT r3 #1): a store seeded by
-  * the batch backfill ([[Incremental.seed]]) plus incremental steps over
-  * the log TAIL must equal a full backfill over the whole log — and the
-  * catch-up phase must pay I/O proportional to the tail, with the seeded
-  * prefix's event files pruned to footer reads by the high-water filter
-  * (the reference's dehydrate→`_bulkMode` flip,
+/** The cold-start→catch-up phase handoff (VERDICT r3 #1): a store seeded
+  * from a log prefix by [[Incremental.seed]] (the prefix folded as one
+  * [[Incremental.step]]) plus incremental steps over the log TAIL must
+  * equal the independent one-shot backfill ([[Derivations.deriveAll]]) of
+  * the whole log — and the catch-up phase must pay I/O proportional to the
+  * tail, with the seeded prefix's event files pruned to footer reads by the
+  * high-water filter (the reference's dehydrate→`_bulkMode` flip,
   * `RelationalDatabaseProjection.cs:460-495`, `Worker.cs:32-48`).
   */
 class HandoffSpec extends ProjectorTestBase {
@@ -47,7 +48,9 @@ class HandoffSpec extends ProjectorTestBase {
     ()
   }
 
-  test("backfill[0,k] seed + incremental (k,n] equals backfill[0,n] on all 8 tables") {
+  /** The seed clears its own batch-0 marker, so the tail's batch 0
+    * applies; a second seed on the now-warm store is refused. */
+  test("step-seeded prefix [0,k] + steps over (k,n] equal the backfill of [0,n] on all 8 tables") {
     val events = LogGen.scenario(new Random(55))
     val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
     val k = rows.length / 2
@@ -57,6 +60,10 @@ class HandoffSpec extends ProjectorTestBase {
     val hw = Incremental.seed(store, EventLog.decode(toDf(rows.take(k))))
     assert(hw === k.toLong)
     assert(store.highWater === k.toLong)
+    assert(store.lastAppliedBatch.isEmpty)
+    val reseed = intercept[IllegalArgumentException](
+      Incremental.seed(store, EventLog.decode(toDf(rows.take(k)))))
+    assert(reseed.getMessage.contains(stateDir), reseed.getMessage)
 
     // tail in 3 chunks through the batch-id path (snapshots + skip active)
     val tail = rows.drop(k)
@@ -73,6 +80,34 @@ class HandoffSpec extends ProjectorTestBase {
     }
   }
 
+  /** A seed that died after its step committed leaves its bound and the
+    * batch-0 marker behind, and the retry reads a log that has grown
+    * since. It must record the bound of the batch the tables hold, not the
+    * grown log's: the stream folds only `seq` above the high water, so a
+    * larger one would drop the events in between for good. */
+  test("a crashed seed retried over a grown log records the high water of the batch it folded") {
+    val events = LogGen.scenario(new Random(56))
+    val rows = events.zipWithIndex.map { case (e, i) => Row((i + 1).toLong, e.typ, e.payload) }
+    val k = rows.length / 2
+    val store = new StateStore(spark, Files.createTempDirectory("graft-reseed").toFile.getPath)
+
+    // what a seed of [0,k] leaves when it dies between its step and its high water
+    store.writeMeta("seed_bound", k.toString)
+    Incremental.step(store, EventLog.decode(toDf(rows.take(k))), batchId = 0)
+
+    assert(Incremental.seed(store, EventLog.decode(toDf(rows))) === k.toLong)
+    assert(store.highWater === k.toLong)
+    assert(store.lastAppliedBatch.isEmpty)
+    assert(store.readMeta("seed_bound").isEmpty)
+    Incremental.step(store, EventLog.decode(toDf(rows.drop(k))), batchId = 0)
+
+    val oracle = Derivations.deriveAll(EventLog.decode(toDf(rows)).cache())
+    oracle.foreach { case (table, expected) =>
+      val got = store.readAll(table, Incremental.outputSchema(table))
+      assert(normalized(got) === normalized(expected), s"table $table diverged after the re-seed")
+    }
+  }
+
   test("CatchUp cold start dehydrates in place, warm restarts skip it, stream folds only the tail") {
     val dir = Files.createTempDirectory("graft-cold").toFile
     val eventsDir = s"$dir/events"
@@ -83,9 +118,11 @@ class HandoffSpec extends ProjectorTestBase {
     val k = rows.length / 2
     writeChunk(rows.take(k), eventsDir, "00")
 
-    // cold: seeds from the existing files via the fast batch derivation
+    // cold: seeds from the existing files as one step, and leaves no
+    // applied-batch marker that could mask the stream's own batch 0
     assert(CatchUp.dehydrateIfCold(spark, eventsDir, store))
     assert(store.highWater === k.toLong)
+    assert(store.lastAppliedBatch.isEmpty)
     // second call is a no-op (already seeded)
     assert(!CatchUp.dehydrateIfCold(spark, eventsDir, store))
 

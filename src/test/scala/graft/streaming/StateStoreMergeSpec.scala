@@ -194,32 +194,60 @@ class StateStoreMergeSpec extends ProjectorTestBase {
   test("a store written under another codec merges and reads unchanged (lz4 migration)") {
     // parquet files are self-describing, so a pre-round-12 store (snappy)
     // keeps working after the writers switched to lz4 — merged buckets
-    // come out lz4, untouched buckets stay snappy, reads see one table
+    // come out lz4, untouched buckets stay snappy, reads see one table.
+    // A 64-byte budget spreads the 24 rows over several buckets, so the
+    // merge leaves some untouched and the read spans both codecs.
+    import org.apache.hadoop.fs.{FileSystem, Path}
     val dir = Files.createTempDirectory("graft-codec").toFile.getPath
-    val store = new StateStore(spark, dir)
     val initial = (0 until 24).map(i => s"k$i" -> i)
-    store.writeBucketed("t", "k", toDf(initial))
+    new StateStore(spark, dir, maxBucketBytes = 64).writeBucketed("t", "k", toDf(initial))
+    // the lz4-era program reopens the store at the default budget: at 64
+    // bytes every merged bucket would pass the growth trigger and the
+    // re-layout would rewrite the untouched buckets too
+    val store = new StateStore(spark, dir)
+    val n = store.bucketCount("t")
+    assert(n > 1, s"t is one bucket: the merge cannot leave a bucket untouched")
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    def bucketDir(b: Int) = new Path(s"$dir/t/bucket=$b")
+    // compression codecs named in the footers of a bucket's parquet files
+    def codecs(b: Int): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      fs.listStatus(bucketDir(b)).map(_.getPath).filter(_.getName.endsWith(".parquet"))
+        .flatMap { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, fs.getConf))
+          try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+          finally r.close()
+        }.toSet
+    }
     // rewrite every bucket's files with snappy IN PLACE (simulating the
     // old store), preserving the layout and the bucket hashing
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    (0 until 4).foreach { b =>
-      val p = s"$dir/t/bucket=$b"
-      if (fs.exists(new org.apache.hadoop.fs.Path(p))) {
+    (0 until n).foreach { b =>
+      val p = bucketDir(b).toString
+      if (fs.exists(bucketDir(b))) {
         val rows = spark.read.schema(schema).parquet(p)
           .collect().map(r => (r.getString(0), r.getInt(1)))
         val tmp = s"$dir/.codec_tmp"
         toDf(rows.toSeq).coalesce(1).write.mode("overwrite")
           .option("compression", "snappy").parquet(tmp)
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        assert(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(p)))
+        fs.delete(bucketDir(b), true)
+        assert(fs.rename(new Path(tmp), bucketDir(b)))
       }
     }
     assert(contents(store) === initial.toSet, "snappy rewrite changed contents")
     // an lz4-era merge over the snappy store: delete k0/k1, rewrite k2, add new
-    store.mergeReplace("t", "k", keys(store, Seq("k0", "k1", "k2", "knew")),
+    val touchedKeys = Seq("k0", "k1", "k2", "knew")
+    val touched = touchedKeys.map(store.bucketOfValue("t", _)).toSet
+    val untouched = (0 until n).filter(b => !touched(b) && fs.exists(bucketDir(b)))
+    assert(untouched.nonEmpty, s"every non-empty bucket of $n is touched by $touched")
+    store.mergeReplace("t", "k", keys(store, touchedKeys),
       toDf(Seq("k2" -> 999, "knew" -> 1000)))
+    assert(store.bucketCount("t") === n, "the merge re-laid the table out")
+    untouched.foreach { b =>
+      assert(codecs(b) === Set("SNAPPY"), s"untouched bucket $b was rewritten")
+    }
+    val merged = codecs(store.bucketOfValue("t", "knew"))
+    assert(merged.nonEmpty && merged.forall(_.startsWith("LZ4")), s"merged bucket holds $merged")
     val expected = initial.toSet -- Set("k0" -> 0, "k1" -> 1, "k2" -> 2) ++
       Set("k2" -> 999, "knew" -> 1000)
     assert(contents(store) === expected, "mixed-codec merge diverged")
